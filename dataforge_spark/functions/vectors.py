@@ -79,30 +79,48 @@ def to_matrix(
         return X, bad
 
 
+def _row_cosine(X: np.ndarray, Y: np.ndarray) -> np.ndarray:
+    """Row-wise cosine of two ``(n, d)`` matrices; zero-norm rows score 0.0."""
+    num = np.einsum("nd,nd->n", X, Y)
+    den = np.linalg.norm(X, axis=1) * np.linalg.norm(Y, axis=1)
+    return np.where(den > 0, num / np.where(den > 0, den, 1.0), 0.0)
+
+
 def batch_cosine_udf():
     """Pairwise cosine(a, b) as an Arrow-batched pandas UDF: one
-    vectorized row-wise dot + norm per batch (float64). Zero-norm inputs
-    score 0.0, matching ``cosine`` above; NULL or ragged-length vectors
-    score NULL (the Column formulation's behavior) instead of failing
-    the task."""
+    vectorized row-wise dot + norm per batch (float64). Each row scores
+    on its own pair, whatever else shares its Arrow batch: zero-norm
+    inputs score 0.0, matching ``cosine`` above; a NULL side, a-vs-b
+    length mismatch, or non-numeric vector scores NULL instead of
+    failing the task. (``cosine`` itself scores a NULL side as 0.0.)"""
 
     @F.pandas_udf("double")
     def cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        X, bad_x = to_matrix(a.tolist())
-        Y, bad_y = to_matrix(b.tolist())
-        if X.shape[1] != Y.shape[1]:  # a-vs-b length mismatch: all NULL
-            return pd.Series([None] * len(a), dtype="float64")
-        num = np.einsum("nd,nd->n", X, Y)
-        den = np.linalg.norm(X, axis=1) * np.linalg.norm(Y, axis=1)
-        out = np.where(den > 0, num / np.where(den > 0, den, 1.0), 0.0)
-        if bad_x is not None or bad_y is not None:
-            bad = (bad_x if bad_x is not None else False) | (
-                bad_y if bad_y is not None else False
-            )
-            return pd.Series(
-                [None if bad[i] else float(v) for i, v in enumerate(out)],
-                dtype="float64",
-            )
+        av, bv = a.tolist(), b.tolist()
+        X, bad_x = to_matrix(av)
+        Y, bad_y = to_matrix(bv)
+        if bad_x is None and bad_y is None and X.shape[1] == Y.shape[1]:
+            return pd.Series(_row_cosine(X, Y))
+        # Salvage: score the valid pairs grouped by their shared width,
+        # leave every other row NULL (NaN → null on the Arrow way out).
+        width = np.array(
+            [
+                len(x) if x is not None and y is not None and len(x) == len(y)
+                else -1
+                for x, y in zip(av, bv)
+            ],
+            dtype=np.int64,
+        )
+        out = np.full(len(av), np.nan)
+        for d in np.unique(width[width >= 0]):
+            idx = np.flatnonzero(width == d)
+            X, bad_x = to_matrix([av[i] for i in idx], int(d))
+            Y, bad_y = to_matrix([bv[i] for i in idx], int(d))
+            s = _row_cosine(X, Y)
+            for bad in (bad_x, bad_y):
+                if bad is not None:
+                    s[bad] = np.nan
+            out[idx] = s
         return pd.Series(out)
 
     return cos

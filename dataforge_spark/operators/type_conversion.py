@@ -203,8 +203,10 @@ def _detect_stats(df: DataFrame, str_cols: list[str], fmts: dict) -> dict:
     Parse-semantics parity with the JVM casts the APPLY step still uses:
 
     - numeric  = ``try_cast('double')``: pd.to_numeric, plus Java's extras
-      it rejects — literal nan words (parse to NaN, non-null in Spark) and
-      float-literal suffixes ('5f'/'5d'); whitespace both engines strip.
+      it rejects — literal nan words (parse to NaN, non-null in Spark),
+      float-literal suffixes ('5f'/'5d') and exponents past the double
+      range ('0e1000' → 0.0, '1e1000' → Infinity); whitespace both
+      engines strip.
     - integral matches ``num == floor(num)`` with a finite + long-range
       guard (Java's floor(double)→bigint overflows past ±2^63; such
       values stay on the double path).
@@ -254,6 +256,9 @@ def _detect_stats(df: DataFrame, str_cols: list[str], fmts: dict) -> dict:
     # NOT Unicode whitespace — pandas' default str.strip() is wider and
     # would count NBSP-wrapped values the JVM apply-cast then nulls.
     JAVA_WS = "".join(map(chr, range(0x21)))
+    # Java's decimal-with-exponent grammar, ASCII digits only (float()
+    # would also take Unicode digits and '_' separators Java rejects)
+    JAVA_EXP_RE = r"[+-]?(?:[0-9]+\.?[0-9]*|\.[0-9]+)[eE][+-]?[0-9]+[fFdD]?"
 
     def stats(batches):
         for pdf in batches:
@@ -280,17 +285,25 @@ def _detect_stats(df: DataFrame, str_cols: list[str], fmts: dict) -> dict:
                     # of 'yes'/'no' or dates would otherwise pay 3 more
                     # full string passes for nothing.
                     low = stripped.str.lower()
+                    exp_form = stripped.str.fullmatch(JAVA_EXP_RE)
                     cand = (
                         stripped.str[-1:].isin(["f", "F", "d", "D"])
                         | (low == "nan")
                         | (stripped != miss)
+                        | exp_form
                     )
                     if cand.any():
                         t = stripped[cand]
-                        num.loc[t.index] = pd.to_numeric(
-                            t.str.replace(r"(?<=[\d.])[fFdD]$", "", regex=True),
-                            errors="coerce",
+                        bare = t.str.replace(
+                            r"(?<=[\d.])[fFdD]$", "", regex=True
                         )
+                        num.loc[t.index] = pd.to_numeric(bare, errors="coerce")
+                        # to_numeric rejects exponents past the double
+                        # range; Java parses them to ±Infinity or ±0.0,
+                        # as float() does
+                        far = num.loc[t.index].isna() & exp_form[cand]
+                        if far.any():
+                            num.loc[far[far].index] = bare[far].map(float)
                         # bare (unsigned) nan only: '+nan'/'-nan' are
                         # rejected by Spark's string→double parse
                         n_nan_lit = int((t.str.lower() == "nan").sum())

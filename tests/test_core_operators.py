@@ -467,7 +467,9 @@ def test_detect_stats_matches_jvm_semantics(spark):
             "nan", "NAN", "+nan", "inf", "-Infinity", "1,000", "0x1A",
             "12.", ".5", "+5", "5f", "5D", "1.f", "5 f", "nanf", "1e",
             "12.3.4", "true", " YES ", "\ttrue", "2020-01-01", "2020-1-1",
-            "2020-13-01", "2020-02-30", "2020-01-01 05:06:07", None, "42"]
+            "2020-13-01", "2020-02-30", "2020-01-01 05:06:07", None, "42",
+            # exponents past the double range: Java parses 0.0 / ±Infinity
+            "0e1000", "1e1000", "-1e999f", ".5e400", " 1e309d"]
     df = spark.createDataFrame([(v,) for v in vals], "c string")
     fmts = {"c": ["yyyy-MM-dd", "yyyy-MM-dd HH:mm:ss"]}
     got = _detect_stats(df, ["c"], fmts)

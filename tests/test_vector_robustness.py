@@ -58,6 +58,41 @@ def test_batch_cosine_null_and_ragged(spark):
         assert r["s"] == r["expect"], (r["s"], r["expect"])
 
 
+def test_batch_cosine_scores_do_not_depend_on_batch(spark):
+    # The same five rows in ONE partition, so one Arrow batch holds the
+    # clean, NULL, ragged and zero-norm pairs together: each row must
+    # still score on its own, whatever the core count.
+    rows = [
+        ([1.0, 0.0], [1.0, 0.0], 1.0),
+        ([1.0, 0.0], [0.0, 1.0], 0.0),
+        (None, [1.0, 0.0], None),
+        ([1.0, 0.0, 0.0], [1.0, 0.0], None),
+        ([0.0, 0.0], [1.0, 0.0], 0.0),
+    ]
+    df = spark.createDataFrame(
+        rows, "a array<double>, b array<double>, expect double"
+    ).coalesce(1)
+    cos = batch_cosine_udf()
+    got = df.select(F.round(cos("a", "b"), 6).alias("s"), "expect").collect()
+    assert [r["s"] for r in got] == [r["expect"] for r in got]
+
+
+def test_cosine_neardup_pairs_survives_one_ragged_embedding(spark):
+    from dataforge_spark.dedup.embedding import cosine_neardup_pairs
+
+    corpus = spark.createDataFrame(
+        [
+            (1, [1.0, 0.0]),
+            (2, [0.99, 0.01]),
+            (3, [0.0, 1.0]),
+            (4, [1.0, 0.0, 0.0]),  # ragged: its pairs score NULL
+        ],
+        "vec_id int, embedding array<double>",
+    ).coalesce(1)
+    got = [tuple(r) for r in cosine_neardup_pairs(corpus).collect()]
+    assert got == [(1, 2, round(0.99 / (0.99**2 + 0.01**2) ** 0.5, 6))]
+
+
 def test_batch_cosine_all_null_batch(spark):
     df = spark.createDataFrame(
         [(None, None)] * 3, "a array<double>, b array<double>"
