@@ -18,6 +18,7 @@ from ..io import ROW_ID
 from .type_conversion import (
     DATETIME_FORMATS,
     _elect_datetime_formats,
+    _strftime_to_spark,
     parse_timestamp_expr,
 )
 
@@ -42,10 +43,12 @@ def parse_datetime_columns(
     """``errors``: 'coerce' nulls unparseable values (pandas default in
     the reference, methods/dateTimeParsing.py:21); 'raise' errors when an
     adopted column still has unparseable non-null values; 'ignore' leaves
-    such columns entirely unchanged (pandas astype semantics)."""
+    such columns entirely unchanged (pandas astype semantics).
+    ``date_format`` is a strftime pattern, as the reference's pandas takes
+    it ('%d/%m/%Y'), or a Spark datetime pattern ('dd/MM/yyyy')."""
     if errors not in ("coerce", "raise", "ignore"):
         raise ValueError(f"errors must be coerce|raise|ignore, got {errors!r}")
-    fmts = [date_format] if date_format else DATETIME_FORMATS
+    fmts = [_strftime_to_spark(date_format)] if date_format else DATETIME_FORMATS
     if columns is None:
         columns = [
             f.name

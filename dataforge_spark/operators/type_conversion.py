@@ -58,6 +58,55 @@ _PY_FORMATS = {
     "dd-MM-yyyy": "%d-%m-%Y",
 }
 
+# The other direction, for a user's date_format: the reference passes it
+# to pandas, so it is a strftime pattern. Only codes Spark can PARSE map
+# (Spark rejects e.g. day-of-week letters in parse patterns).
+_STRFTIME_TO_SPARK = {
+    "Y": "yyyy", "y": "yy", "m": "MM", "d": "dd", "H": "HH", "I": "hh",
+    "M": "mm", "S": "ss", "f": "SSSSSS", "p": "a", "b": "MMM", "B": "MMMM",
+    "j": "DDD", "z": "Z", "%": "%",
+}
+
+
+def _strftime_to_spark(fmt: str) -> str:
+    """Spark datetime pattern for a strftime ``fmt`` ('%Y-%m-%d' →
+    'yyyy-MM-dd'); a pattern without '%' is taken as Spark's already.
+    Literal letters and Spark's reserved characters are quoted. Raises
+    ValueError on a code Spark cannot parse, so a bad config fails inside
+    the op that builds the plan, not at write time."""
+    if "%" not in fmt:
+        return fmt
+    out, lit = [], []
+
+    def flush():
+        if lit:
+            text = "".join(lit)
+            if any(ch.isalpha() or ch in "'[]{}#" for ch in text):
+                text = "'" + text.replace("'", "''") + "'"
+            out.append(text)
+            lit.clear()
+
+    i = 0
+    while i < len(fmt):
+        if fmt[i] != "%":
+            lit.append(fmt[i])
+            i += 1
+            continue
+        code = fmt[i + 1:i + 2]
+        if code not in _STRFTIME_TO_SPARK:
+            raise ValueError(
+                f"unsupported strftime code %{code} in date_format {fmt!r}"
+            )
+        if code == "%":
+            lit.append("%")
+        else:
+            flush()
+            out.append(_STRFTIME_TO_SPARK[code])
+        i += 2
+    flush()
+    return "".join(out)
+
+
 DETECT_SAMPLE_ROWS = 10_000
 
 # Strict-padding regexes mirroring Java's strict DateTimeFormatter field
@@ -204,9 +253,10 @@ def _detect_stats(df: DataFrame, str_cols: list[str], fmts: dict) -> dict:
 
     - numeric  = ``try_cast('double')``: pd.to_numeric, plus Java's extras
       it rejects — literal nan words (parse to NaN, non-null in Spark),
-      float-literal suffixes ('5f'/'5d') and exponents past the double
-      range ('0e1000' → 0.0, '1e1000' → Infinity); whitespace both
-      engines strip.
+      float-literal suffixes ('5f'/'5d'), exponents past the double
+      range ('0e1000' → 0.0, '1e1000' → Infinity) and hex floats
+      ('0x1p3' → 8.0, '-0x1.8p1f' → -3.0); whitespace both engines
+      strip.
     - integral matches ``num == floor(num)`` with a finite + long-range
       guard (Java's floor(double)→bigint overflows past ±2^63; such
       values stay on the double path).
@@ -259,6 +309,19 @@ def _detect_stats(df: DataFrame, str_cols: list[str], fmts: dict) -> dict:
     # Java's decimal-with-exponent grammar, ASCII digits only (float()
     # would also take Unicode digits and '_' separators Java rejects)
     JAVA_EXP_RE = r"[+-]?(?:[0-9]+\.?[0-9]*|\.[0-9]+)[eE][+-]?[0-9]+[fFdD]?"
+    # Java's hex-float grammar ('0x1p3', '-0x1.8p1f'): the binary exponent
+    # is mandatory, so '0x1A' stays non-numeric as in Java
+    JAVA_HEX_RE = (
+        r"[+-]?0[xX](?:[0-9a-fA-F]+\.?[0-9a-fA-F]*|\.[0-9a-fA-F]+)"
+        r"[pP][+-]?[0-9]+[fFdD]?"
+    )
+
+    def from_hex(h: str) -> float:
+        # float.fromhex raises where Java rounds past the range to ±Infinity
+        try:
+            return float.fromhex(h)
+        except OverflowError:
+            return float("-inf") if h.startswith("-") else float("inf")
 
     def stats(batches):
         for pdf in batches:
@@ -286,11 +349,13 @@ def _detect_stats(df: DataFrame, str_cols: list[str], fmts: dict) -> dict:
                     # full string passes for nothing.
                     low = stripped.str.lower()
                     exp_form = stripped.str.fullmatch(JAVA_EXP_RE)
+                    hex_form = stripped.str.fullmatch(JAVA_HEX_RE)
                     cand = (
                         stripped.str[-1:].isin(["f", "F", "d", "D"])
                         | (low == "nan")
                         | (stripped != miss)
                         | exp_form
+                        | hex_form
                     )
                     if cand.any():
                         t = stripped[cand]
@@ -304,6 +369,10 @@ def _detect_stats(df: DataFrame, str_cols: list[str], fmts: dict) -> dict:
                         far = num.loc[t.index].isna() & exp_form[cand]
                         if far.any():
                             num.loc[far[far].index] = bare[far].map(float)
+                        # hex floats, which to_numeric never parses
+                        hx = hex_form[cand]
+                        if hx.any():
+                            num.loc[hx[hx].index] = bare[hx].map(from_hex)
                         # bare (unsigned) nan only: '+nan'/'-nan' are
                         # rejected by Spark's string→double parse
                         n_nan_lit = int((t.str.lower() == "nan").sum())

@@ -11,8 +11,12 @@ Spark-first differences (deliberate):
 * Transformations are composed LAZILY; nothing executes until the caller
   writes or collects. Catalyst then optimizes across op boundaries —
   filters merge, projections fuse, one scan instead of nine.
-* Per-op row/column metrics force an action per op in the reference; here
-  they are OPT-IN (``collect_metrics=True``) because each count is a job.
+* Per-op row/column metrics force actions per op in the reference; here
+  they are OPT-IN (``collect_metrics=True``) because an action is a job
+  or more. Metrics mode runs ONE action per op (``op_metrics``: row
+  counts, changed cells and missing counts in one observed aggregate) and
+  caches the op's output first, so that action also fills the cache the
+  next op reads.
 * The reference's stage-boundary scrub (±Inf→NaN→median-fill after EVERY
   op, /root/reference/pipeline.py:72-100,189) is bug-compat behavior —
   available via ``bug_compat=True`` (SURVEY §1), default off (advertised
@@ -24,9 +28,11 @@ from __future__ import annotations
 import logging
 import os
 import time
+import uuid
 from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .operators import (
@@ -158,40 +164,112 @@ def boundary_scrub(df: DataFrame) -> DataFrame:
     return out
 
 
-def cells_changed(before: DataFrame, after: DataFrame) -> dict[str, int]:
-    """Per-column count of cells whose value differs between ``before`` and
-    ``after``, aligned on ``_row_id`` (reference parity: every method
-    reports per-column "Made N changes" updates,
-    /root/reference/methods/textCleaning.py:76,147-148). ONE join + one
-    aggregate covers ALL shared columns — not a job per column. Values are
+def op_metrics(
+    before: DataFrame, after: DataFrame, missing: bool = False
+) -> dict[str, Any]:
+    """Everything the metrics report says about one op, from ONE action:
+    one aggregate, observed over ``before`` left-joined to ``after`` on
+    ``_row_id``.
+
+    Returns ``rows_before`` (``count(*)``), ``rows_after`` (matched
+    ``after`` rows — no op adds rows, so the left join loses none),
+    ``cells_changed`` and, when ``missing`` is set, ``missing_before`` /
+    ``missing_after`` (``profile.missing_counts`` of each side).
+
+    ``cells_changed`` is the per-column count of cells whose value differs
+    between the sides (reference parity: every method reports per-column
+    "Made N changes" updates, reference methods/textCleaning.py:76,147-148),
+    over matched rows and ALL shared columns at once. Values are
     compared as strings (so a type-converting op counts every re-typed
     cell) and null-safely (NULL→value and value→NULL both count). Columns
     added or dropped by the op are not "changed cells"; they show up in
-    the columns_before/after metrics instead. Returns {} when either side
-    lacks ``_row_id`` — without a row key there is no alignment to count
-    against."""
-    shared = [c for c in before.columns if c in after.columns and c != ROW_ID]
-    if not shared or ROW_ID not in before.columns or ROW_ID not in after.columns:
-        return {}
+    the columns_before/after metrics instead. Missing predicates run on
+    the typed columns, before the string cast. ``_row_id`` is assumed
+    unique, as ``io`` assigns it. When either side lacks ``_row_id`` there
+    is no alignment to count against: ``cells_changed`` is {} and the two
+    sides' one-row aggregates are cross-joined instead — still one
+    action."""
+    from .profile import _missing_expr, _user_fields
+
+    keyed = ROW_ID in before.columns and ROW_ID in after.columns
+    shared = [
+        c for c in before.columns if c in after.columns and c != ROW_ID
+    ] if keyed else []
+    b_fields = _user_fields(before) if missing else []
+    a_fields = _user_fields(after) if missing else []
     b = before.select(
-        ROW_ID, *[qcol(c).cast("string").alias(f"__b_{c}") for c in shared]
+        *([qcol(ROW_ID).alias("__b_rid")] if keyed else []),
+        *[_missing_expr(f).cast("long").alias(f"__mb{i}") for i, f in enumerate(b_fields)],
+        *[qcol(c).cast("string").alias(f"__b{i}") for i, c in enumerate(shared)],
     )
     a = after.select(
-        ROW_ID, *[qcol(c).cast("string").alias(f"__a_{c}") for c in shared]
+        *([qcol(ROW_ID).alias("__a_rid")] if keyed else []),
+        *[_missing_expr(f).cast("long").alias(f"__ma{i}") for i, f in enumerate(a_fields)],
+        *[qcol(c).cast("string").alias(f"__a{i}") for i, c in enumerate(shared)],
     )
-    row = (
-        a.join(b, ROW_ID)
-        .agg(
+    b_aggs = [F.count(F.lit(1)).alias("__rows_b")] + [
+        F.sum(f"__mb{i}").alias(f"__mb{i}") for i in range(len(b_fields))
+    ]
+    a_sums = [F.sum(f"__ma{i}").alias(f"__ma{i}") for i in range(len(a_fields))]
+    if keyed:
+        matched = F.col("__a_rid").isNotNull()
+        # observed, not agg().collect(): the aggregate rides the join's
+        # own stage, so there is no shuffle to a final aggregate — one
+        # job fewer per op (cache fill, broadcast, scan). The name is
+        # unique because concurrent requests share the session.
+        obs = Observation(f"op_metrics_{uuid.uuid4().hex}")
+        b.join(a, F.col("__b_rid") == F.col("__a_rid"), "left").observe(
+            obs,
+            *b_aggs,
+            F.count("__a_rid").alias("__rows_a"),
+            *a_sums,
             *[
                 F.sum(
-                    (~qcol(f"__a_{c}").eqNullSafe(qcol(f"__b_{c}"))).cast("long")
-                ).alias(c)
-                for c in shared
-            ]
+                    (matched & ~F.col(f"__a{i}").eqNullSafe(F.col(f"__b{i}")))
+                    .cast("long")
+                ).alias(f"__chg{i}")
+                for i in range(len(shared))
+            ],
+        ).write.format("noop").mode("overwrite").save()
+        row = obs.get
+    else:
+        row = (
+            b.agg(*b_aggs)
+            .crossJoin(a.agg(F.count(F.lit(1)).alias("__rows_a"), *a_sums))
+            .collect()[0]
         )
-        .collect()[0]
-    )
-    return {c: int(row[c] or 0) for c in shared}
+    out: dict[str, Any] = {
+        "rows_before": int(row["__rows_b"]),
+        "rows_after": int(row["__rows_a"]),
+        "cells_changed": {
+            c: int(row[f"__chg{i}"] or 0) for i, c in enumerate(shared)
+        },
+    }
+    if missing:
+        out["missing_before"] = {
+            f.name: int(row[f"__mb{i}"] or 0) for i, f in enumerate(b_fields)
+        }
+        out["missing_after"] = {
+            f.name: int(row[f"__ma{i}"] or 0) for i, f in enumerate(a_fields)
+        }
+    return out
+
+
+def cells_changed(before: DataFrame, after: DataFrame) -> dict[str, int]:
+    """Per-column changed-cell counts of ``op_metrics``; {} when either
+    side lacks ``_row_id``."""
+    return op_metrics(before, after)["cells_changed"]
+
+
+def _pin(frame: DataFrame, prev: DataFrame, wanted: bool) -> bool:
+    """Persist ``frame`` (MEMORY_AND_DISK) when ``wanted``, unless its plan
+    is ``prev``'s: an op that changed nothing must not register, and later
+    unpersist, the cache entry ``prev`` already owns. Returns whether it
+    pinned."""
+    if not wanted or frame.sameSemantics(prev):
+        return False
+    frame.persist(StorageLevel.MEMORY_AND_DISK)
+    return True
 
 
 class CleaningPipeline:
@@ -210,11 +288,17 @@ class CleaningPipeline:
         extra full scans. Default ``None`` = auto: persist a boundary only
         when ≥2 downstream enabled ops will run driver-side statistics jobs
         over it (the re-scan count that makes the persist pay for itself).
-        ``True``/``False`` force it — persisting the working set is still a
-        deliberate capacity decision on a real cluster."""
+        Under ``collect_metrics`` auto persists EVERY op's output, the
+        final one included, before that op's one metrics action
+        (``op_metrics``): the action fills the cache, and the next op's
+        statistics, its metrics action and the caller's write read it
+        instead of recomputing the op. ``True``/``False`` force it —
+        persisting the working set is still a deliberate capacity decision
+        on a real cluster. ``release()`` frees what a run leaves pinned."""
         self.bug_compat = bug_compat
         self.collect_metrics = collect_metrics
         self.persist_intermediate = persist_intermediate
+        self._pinned: list[DataFrame] = []
 
     @staticmethod
     def _runs_stat_jobs(name: str, cfg: dict[str, Any]) -> bool:
@@ -231,12 +315,11 @@ class CleaningPipeline:
         if name == "typo_fix":
             # common_typos is a pure regexp chain; fuzzy/spell fit a map
             return cfg.get("method", "common_typos") != "common_typos"
-        if name == "data_type_conversion":
+        if name in ("data_type_conversion", "datetime_parsing"):
+            # errors=raise|ignore count failing casts in a job of their own
             return bool(cfg.get("auto_detect", True)) or cfg.get("errors") in (
                 "ignore", "raise"
             )
-        if name == "datetime_parsing":
-            return bool(cfg.get("auto_detect", True))
         return True  # outliers / normalization / encoding fit statistics
 
     def _apply_one(self, df: DataFrame, name: str, cfg: dict[str, Any]) -> DataFrame:
@@ -261,6 +344,7 @@ class CleaningPipeline:
                 date_format=cfg.get("date_format"),
                 auto_detect=cfg.get("auto_detect", True),
                 extract_features=cfg.get("extract_features", False),
+                errors=cfg.get("errors", "coerce"),
             )
         if name == "missing_values":
             return missing_values.fix_missing_values(
@@ -311,12 +395,12 @@ class CleaningPipeline:
 
     def run(self, df: DataFrame, operations: dict[str, Any]) -> tuple[DataFrame, dict]:
         """Apply enabled ops in canonical order; per-op error isolation
-        (reference :191-201). Returns (DataFrame, report)."""
+        (reference :191-201). Returns (DataFrame, report). The last
+        persisted boundary stays pinned for the caller's write or collect;
+        ``release()`` frees it."""
         problems = validate_operations(operations)
         if problems:
             raise ValueError("; ".join(problems))
-
-        from pyspark import StorageLevel
 
         report: dict[str, Any] = {"operations": {}, "order": []}
         t0 = time.time()
@@ -341,58 +425,34 @@ class CleaningPipeline:
             for n in enabled
         }
 
-        for name in CANONICAL_ORDER:
-            cfg = operations.get(name)
-            if not cfg or not cfg.get("enabled", False):
-                continue
+        for name in enabled:
+            cfg = operations[name]
             op_report: dict[str, Any] = {"status": "success"}
             logger.info("Running %s operation...", name)
+            if self.persist_intermediate is not None:
+                do_persist = self.persist_intermediate
+            else:
+                do_persist = self.collect_metrics or stat_after[name] >= 2
+            pinned = None
             try:
-                before = current.count() if self.collect_metrics else None
                 nxt = self._apply_one(current, name, cfg)
                 if self.collect_metrics:
-                    after = nxt.count()
-                    op_report.update(
-                        {
-                            "rows_before": before, "rows_after": after,
-                            "columns_before": len(current.columns),
-                            "columns_after": len(nxt.columns),
-                        }
-                    )
-                    changed = cells_changed(current, nxt)
-                    op_report["cells_changed"] = {
-                        c: n for c, n in changed.items() if n
-                    }
-                    op_report["updates"] = [
-                        f"Column '{c}': Made {n} changes"
-                        for c, n in changed.items() if n
-                    ]
-                    if name == "duplicates":
-                        op_report["duplicate_count"] = before - after
-                    if name == "missing_values":
-                        # Reference UI parity: its report drives a
-                        # before/after missing-value chart
-                        # (/root/reference/frontend/script.js:506-540).
-                        from .profile import missing_counts
-
-                        op_report["missing_before"] = missing_counts(current)
-                        op_report["missing_after"] = missing_counts(nxt)
-                current = boundary_scrub(nxt) if self.bug_compat else nxt
-                if self.persist_intermediate is not None:
-                    do_persist = self.persist_intermediate
-                else:
-                    # metrics mode re-scans every boundary for row counts
-                    # and changed-cell joins, so any non-final boundary
-                    # is worth pinning there.
-                    later = enabled.index(name) < len(enabled) - 1
-                    do_persist = stat_after[name] >= 2 or (
-                        self.collect_metrics and later
-                    )
-                if do_persist:
-                    current = current.persist(StorageLevel.MEMORY_AND_DISK)
-                    persisted.append(current)
+                    # pinned BEFORE the metrics action, so that the action
+                    # fills the cache the later reads of this boundary use
+                    if _pin(nxt, current, do_persist):
+                        pinned = nxt
+                    op_report.update(self._op_report(name, current, nxt))
+                if self.bug_compat:
+                    nxt = boundary_scrub(nxt)
+                if not self.collect_metrics and _pin(nxt, current, do_persist):
+                    pinned = nxt
+                current = nxt
+                if pinned is not None:
+                    persisted.append(pinned)
                 logger.info("%s operation completed successfully", name)
             except Exception as e:  # error-isolated: keep previous df
+                if pinned is not None:
+                    pinned.unpersist(blocking=False)
                 op_report = {"status": "error", "message": str(e)}
                 logger.error("Error in %s: %s", name, e)
             report["operations"][name] = op_report
@@ -404,7 +464,37 @@ class CleaningPipeline:
             report["processing_time_seconds"], len(current.columns),
         )
         report["final_columns"] = list(current.columns)
-        # Keep only the final frame pinned; free the intermediates.
+        # Keep only the last pinned boundary; free the intermediates.
         for p in persisted[:-1]:
             p.unpersist(blocking=False)
+        self._pinned += persisted[-1:]
         return current, sanitize_for_json(report)
+
+    @staticmethod
+    def _op_report(name: str, before: DataFrame, after: DataFrame) -> dict[str, Any]:
+        """The metrics-mode report fields of one op, from ``op_metrics``."""
+        m = op_metrics(before, after, missing=name == "missing_values")
+        changed = {c: n for c, n in m["cells_changed"].items() if n}
+        out: dict[str, Any] = {
+            "rows_before": m["rows_before"], "rows_after": m["rows_after"],
+            "columns_before": len(before.columns),
+            "columns_after": len(after.columns),
+            "cells_changed": changed,
+            "updates": [f"Column '{c}': Made {n} changes" for c, n in changed.items()],
+        }
+        if name == "duplicates":
+            out["duplicate_count"] = m["rows_before"] - m["rows_after"]
+        if name == "missing_values":
+            # Reference UI parity: its report drives a before/after
+            # missing-value chart (reference frontend/script.js:506-540).
+            out["missing_before"] = m["missing_before"]
+            out["missing_after"] = m["missing_after"]
+        return out
+
+    def release(self) -> None:
+        """Unpersist what ``run`` left pinned. Call it once the returned
+        frame has been written or collected; a long-lived session that
+        skips it keeps one cached frame per run."""
+        for p in self._pinned:
+            p.unpersist(blocking=False)
+        self._pinned = []

@@ -188,8 +188,12 @@ class DataForgeService:
         output_path = os.path.join(self.upload_dir, f"{base}_cleaned.csv")
         logger.info("Starting pipeline for file: %s", file_path)
         df = dfio.read_csv(self.spark, file_path)
-        out, report = CleaningPipeline(collect_metrics=True).run(df, operations)
-        dfio.write_csv(out, output_path, single_file=True)
+        pipe = CleaningPipeline(collect_metrics=True)
+        try:
+            out, report = pipe.run(df, operations)
+            dfio.write_csv(out, output_path, single_file=True)
+        finally:
+            pipe.release()
         logger.info("Final data saved to: %s", output_path)
         return {
             "status": "success",

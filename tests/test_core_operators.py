@@ -469,7 +469,11 @@ def test_detect_stats_matches_jvm_semantics(spark):
             "12.3.4", "true", " YES ", "\ttrue", "2020-01-01", "2020-1-1",
             "2020-13-01", "2020-02-30", "2020-01-01 05:06:07", None, "42",
             # exponents past the double range: Java parses 0.0 / ±Infinity
-            "0e1000", "1e1000", "-1e999f", ".5e400", " 1e309d"]
+            "0e1000", "1e1000", "-1e999f", ".5e400", " 1e309d",
+            # Java hex floats: the binary exponent is mandatory ('0x1A',
+            # '0x1.8' stay non-numeric); past the range → ±Infinity / 0.0
+            "0x1p3", "0x1.8p1", "-0x1p3", "+0X1.8P1f", "0x.8p1d", " 0x1p3 ",
+            "0x1.8", "0x1p2000", "-0x1p2000", "0x1p-2000", "0xp3"]
     df = spark.createDataFrame([(v,) for v in vals], "c string")
     fmts = {"c": ["yyyy-MM-dd", "yyyy-MM-dd HH:mm:ss"]}
     got = _detect_stats(df, ["c"], fmts)

@@ -221,3 +221,33 @@ def test_client_side_pre_upload_preview_wired(server):
                  'id="preview-note"', "renderPreviewTable"):
         assert node in html, f"pre-upload preview machinery missing: {node}"
     assert html.count("localCsvPreview(f)") == 2  # change + drop handlers
+
+
+def test_sequential_requests_leave_no_cached_frames(spark, server):
+    """Many /clean-data requests in one long-lived session: every request
+    releases what its pipeline cached, and every output still downloads
+    whole (the write reads the cache before it is released)."""
+    persistent = spark.sparkContext._jsc.sc().getPersistentRDDs
+    start = persistent().size()
+    ops = {
+        "missing_values": {"enabled": True, "strategy": "fill_mean"},
+        "duplicates": {"enabled": True},
+        "normalization": {"enabled": True, "method": "minmax", "columns": ["price"]},
+    }
+    outputs = []
+    for i in range(4):
+        r, body = _post(server, "/upload", {"file": (f"seq{i}.csv", CSV)})
+        assert r.status == 200, body
+        r, body = _post(server, "/clean-data", {
+            "file_path": json.loads(body)["file_path"], "operations": json.dumps(ops)})
+        assert r.status == 200, body
+        cleaned = json.loads(body)
+        assert all(op["status"] == "success"
+                   for op in cleaned["result"]["operations"].values()), cleaned
+        r, data = _get(server, cleaned["download_url"])
+        assert r.status == 200
+        outputs.append(data)
+    assert persistent().size() == start
+    lines = outputs[0].decode().strip().splitlines()
+    assert lines[0] == "name,qty,price" and len(lines) == 1 + 3
+    assert all(o == outputs[0] for o in outputs)
