@@ -212,16 +212,12 @@ def crawl_to_training_data(
             ).drop("_qp")
         kept = _stage("after_classifier", kept)
 
-    # Materialize the minhash input BEFORE building its plan: the LSH
-    # join's broadcast subtrees execute as independent driver-eager
-    # jobs, and against an unfilled cache EACH one re-runs the whole
-    # WARC→filters prefix (measured 3x the row at sf0.01). One cheap
-    # count here fills the chain linearly; every later scan hits cache.
-    kept.count()
     corpus = _stage("after_near_dedup", minhash_dedup(
         kept, text_col="text", id_col="doc_id", threshold=minhash_threshold
     ))
-    corpus.count()  # same reason: BPE + chunking + edge aggs re-scan it
+    # fill the pinned corpus once: BPE training, chunking and the edge
+    # aggregates each re-scan it
+    corpus.count()
 
     if tokenizer is None:
         tokenizer = train_bpe(corpus, "text", vocab_size=vocab_size)

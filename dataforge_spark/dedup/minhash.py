@@ -17,6 +17,15 @@ Scale: no n² anywhere and ONE shuffle total (the banding groupBy of
 |docs|·bands rows); bucket blow-up is bounded by ``max_bucket`` (skip
 degenerate buckets — boilerplate shingle sets). Probability a pair with
 Jaccard j becomes a candidate: 1 − (1 − j^r)^b.
+
+``minhash_dedup`` reads its input three times (signatures, verification,
+the final anti-join), so it materializes the input once with an eager
+``localCheckpoint`` first: an unmaterialized input plan (a quality gate
+with its own shuffles) would otherwise run once per read. The frame it
+returns holds four local checkpoints (the input, the band keys, the
+candidate pairs, the verify-side shingles). Their blocks stay until the
+frame is dropped AND the JVM has garbage-collected the checkpointed RDDs,
+when Spark's ContextCleaner unpersists them.
 """
 
 from __future__ import annotations
@@ -238,7 +247,16 @@ def minhash_dedup(
     pass keeps both A and B but transitivity says A~C~B are one cluster.
     Costs the component propagation's extra O(log diameter) rounds.
     The policy lives in ``dedup.drop.drop_near_duplicates`` — the same
-    helper applies to simhash/jaccard/embedding pair frames."""
+    helper applies to simhash/jaccard/embedding pair frames.
+
+    The input is materialized ONCE, by an eager ``localCheckpoint``,
+    before anything reads it: the pair search and the final anti-join
+    then read stored blocks, so an upstream plan (a quality gate with
+    shuffles) runs exactly once, and the parallelism gates in the pair
+    search see a materialized frame and start no job. The returned frame
+    holds that checkpoint and the pair search's three until it is
+    dropped (see the module docstring)."""
+    df = df.localCheckpoint(eager=True)
     pairs = minhash_dedup_pairs(df, text_col, id_col, **kwargs)
     from .drop import drop_near_duplicates
 

@@ -111,11 +111,14 @@ def exact_quantiles(
     max_collect: int = 1_000_000,
     max_depth: int = 3,
     driver_sort_bytes: int | None = 256 << 20,
+    null_counts: dict | None = None,
 ) -> dict[str, list[float | None]]:
     """Exact quantiles for every (column, prob) pair; values identical to
     ``F.expr("percentile(col, q)")`` on NaN-free input. Returns
     ``{col: [v(probs[0]), v(probs[1]), ...]}`` with None where the column
-    has no non-null values.
+    has no non-null values. Pass a dict as ``null_counts`` to have it
+    filled with each column's NULL count (NaN counts as NULL) from the
+    passes below, at no extra job.
 
     Cost: 1 sketch pass + 2 aggregate passes over the input (shared by
     ALL columns and probs), each fully codegen'd — versus percentile()'s
@@ -172,6 +175,8 @@ def exact_quantiles(
             for c in columns:
                 v = pdf[c].to_numpy(dtype=np.float64)
                 v = v[~np.isnan(v)]
+                if null_counts is not None:
+                    null_counts[c] = len(pdf) - v.size
                 if v.size == 0:
                     out_d[c] = [None] * len(probs)
                     continue
@@ -186,7 +191,8 @@ def exact_quantiles(
     sketch = sketch_quantiles(sel, columns, padded, relative_error)
 
     # Count pass: per (col, prob) below/within + per-col non-null n.
-    aggs = [F.count(F.col(c)).alias(f"n__{c}") for c in columns]
+    aggs = [F.count(F.lit(1)).alias("rows__")]
+    aggs += [F.count(F.col(c)).alias(f"n__{c}") for c in columns]
     brackets: dict[tuple[str, int], tuple[float, float]] = {}
     for c in columns:
         if not sketch[c]:
@@ -200,6 +206,9 @@ def exact_quantiles(
                 F.sum(F.col(c).between(lo, hi).cast("long")).alias(f"w__{c}__{j}"),
             ]
     row = sel.agg(*aggs).collect()[0].asDict()
+    if null_counts is not None:
+        for c in columns:
+            null_counts[c] = row["rows__"] - row[f"n__{c}"]
 
     # Collect pass: sorted in-bracket values for every pair that fits.
     # Pairs are CHUNKED so one job never materializes more than

@@ -31,6 +31,28 @@ FEATURES = {
 }
 
 
+def _check_pattern(df: DataFrame, pattern: str) -> None:
+    """Raise ValueError when Spark cannot parse with ``pattern``
+    ('YYYY-MM-dd', 'yyyy-MM-dd E', 'GGGGG'). Spark itself only finds out
+    when the plan runs, so without this a bad pattern passes the op and
+    fails the write. The check builds the JVM's own parsing formatter on
+    the driver and starts no Spark job; a pattern's validity does not
+    depend on the time zone, so UTC stands in for the session's."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors.exceptions.captured import CapturedException
+
+    jvm = df.sparkSession._jvm
+    try:
+        jvm.org.apache.spark.sql.catalyst.util.TimestampFormatter.apply(
+            pattern, jvm.java.time.ZoneId.of("UTC"), True
+        ).validatePatternString(True)
+    except (CapturedException, Py4JJavaError) as e:
+        # PySpark converts most JVM errors to CapturedException subclasses;
+        # their first two lines name the error and the pattern
+        msg = " ".join(str(e).splitlines()[:2])
+        raise ValueError(f"invalid date_format {pattern!r}: {msg}") from None
+
+
 def parse_datetime_columns(
     df: DataFrame,
     columns: list[str] | None = None,
@@ -48,7 +70,11 @@ def parse_datetime_columns(
     it ('%d/%m/%Y'), or a Spark datetime pattern ('dd/MM/yyyy')."""
     if errors not in ("coerce", "raise", "ignore"):
         raise ValueError(f"errors must be coerce|raise|ignore, got {errors!r}")
-    fmts = [_strftime_to_spark(date_format)] if date_format else DATETIME_FORMATS
+    if date_format:
+        fmts = [_strftime_to_spark(date_format)]
+        _check_pattern(df, fmts[0])
+    else:
+        fmts = DATETIME_FORMATS
     if columns is None:
         columns = [
             f.name

@@ -340,6 +340,10 @@ def fix_missing_values(
         fills: dict[str, object] = {}
         out = df
         if num:
+            # NULL counts come from the same statistics pass: a column that
+            # cannot hold NaN and holds no NULL is left as it is, so an int
+            # column keeps its type (pandas keeps such a column int64).
+            nulls: dict[str, int] = {}
             if strategy == "fill_mean":
                 # NaN-safe mean (pandas .mean() skips NaN; Spark avg
                 # propagates it — a single NaN would poison the fill)
@@ -348,31 +352,35 @@ def fix_missing_values(
                     if isinstance(df.schema[c].dataType, (T.DoubleType, T.FloatType)):
                         return F.when(~F.isnan(col), col)
                     return col
-                stats = df.agg(
-                    *[F.avg(nan_safe(c)).alias(c) for c in num]
+                row = df.agg(
+                    F.count(F.lit(1)),
+                    *[F.avg(nan_safe(c)) for c in num],
+                    *[F.count(qcol(c)) for c in num],
                 ).collect()[0]
+                stats = {c: row[1 + i] for i, c in enumerate(num)}
+                nulls = {c: row[0] - row[1 + len(num) + i] for i, c in enumerate(num)}
             else:
                 # exact linear-interpolated median (pandas parity) via the
                 # bracketed order-statistic path — percentile()'s
                 # distinct-value map is a single-reducer scale cliff.
                 from ..functions.quantiles import exact_quantiles
 
-                stats = {c: v[0] for c, v in exact_quantiles(df, num, [0.5]).items()}
-            # pandas upcasts int columns holding NaN to float before filling
-            # a fractional mean/median; na.fill on an int column would
-            # silently truncate (2.5 → 2), so cast int targets to double.
-            int_types = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+                stats = {
+                    c: v[0]
+                    for c, v in exact_quantiles(df, num, [0.5], null_counts=nulls).items()
+                }
             dtypes = {f.name: f.dataType for f in df.schema.fields}
             for c in num:
-                v = stats[c]
-                if v is None:
+                if stats[c] is None:
                     # all-null column: no statistic to fill from — leave the
                     # NULLs (pandas fillna(NaN) likewise leaves NaN) rather
                     # than inventing 0.0.
                     continue
-                fills[c] = float(v)
-                if isinstance(dtypes[c], int_types) and fills[c] != int(fills[c]):
-                    out = out.withColumn(c, qcol(c).cast("double"))
+                if not nulls[c] and not isinstance(dtypes[c], (T.DoubleType, T.FloatType)):
+                    continue
+                # an int column holding NULL becomes double, as pandas
+                # upcasts it to float64 (see _fill_expr)
+                fills[c] = float(stats[c])
         if cat:
             cat_modes = modes(df, cat)
             for c in cat:

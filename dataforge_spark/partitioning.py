@@ -60,7 +60,12 @@ def ensure_parallelism(
     gated rebalance: when the gate no-ops (already-parallel input) the
     downstream exchange happens exactly as before. Skew caveat: the key
     should spread rows ~uniformly (unique doc ids do); a hot key would
-    make a straggler where round-robin would not."""
+    make a straggler where round-robin would not.
+
+    Cost of the gate: it reads ``df.rdd``'s partition count, and on an
+    adaptive (AQE) plan with shuffles ``df.rdd`` runs every shuffle stage
+    of the plan as its own job. Call it on a scan or on a materialized
+    (eagerly checkpointed) frame, where it starts no job."""
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism * factor
     if df.rdd.getNumPartitions() >= target:

@@ -130,3 +130,17 @@ def test_driver_sort_tier_null_column(spark):
     df = spark.createDataFrame([(None,), (None,)], "x double")
     got = exact_quantiles(df, ["x"], [0.5], driver_sort_bytes=1 << 40)
     assert got == {"x": [None]}
+
+
+@pytest.mark.parametrize("driver_sort_bytes", [1 << 40, None])
+def test_null_counts_come_with_the_quantiles(spark, driver_sort_bytes):
+    """``null_counts`` is filled on both tiers; NaN counts as NULL."""
+    df = spark.createDataFrame(
+        [(1, 1.0), (None, float("nan")), (3, None), (None, 2.0)], "i long, x double"
+    )
+    nulls: dict = {}
+    got = exact_quantiles(
+        df, ["i", "x"], [0.5], driver_sort_bytes=driver_sort_bytes, null_counts=nulls
+    )
+    assert got == {"i": [2.0], "x": [1.5]}
+    assert nulls == {"i": 2, "x": 2}

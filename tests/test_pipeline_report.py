@@ -2,6 +2,7 @@
 (reference report shape, /root/reference/methods/textCleaning.py:76,147-148
 and methods/duplicate.py:50-59), opt-in under collect_metrics."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from dataforge_spark.io import ROW_ID
@@ -267,10 +268,15 @@ def test_release_unpersists_what_run_pinned(spark):
     assert out.count() == 4  # still usable, recomputed
 
 
-def test_metrics_action_failure_is_an_op_error(spark):
+def test_metrics_action_failure_is_an_op_error(spark, monkeypatch):
     """A plan that fails only when executed fails the op's metrics action:
     the op reports error, the previous frame is kept and nothing stays
-    pinned for it."""
+    pinned for it. (The op checks date patterns when it builds the plan;
+    that check is switched off here so the bad pattern reaches the
+    metrics action.)"""
+    from dataforge_spark.operators import datetime_parsing
+
+    monkeypatch.setattr(datetime_parsing, "_check_pattern", lambda df, pattern: None)
     sc = spark.sparkContext._jsc.sc()
     start = sc.getPersistentRDDs().size()
     df = spark.createDataFrame([(0, "2020-01-01"), (1, "x")], f"{ROW_ID} long, d string")
@@ -284,6 +290,65 @@ def test_metrics_action_failure_is_an_op_error(spark):
     assert out.columns == df.columns and out.count() == 2
     assert sc.getPersistentRDDs().size() == start
     pipe.release()
+
+
+def test_fill_leaves_null_free_int_columns_alone(spark, tmp_path):
+    """fill_mean / fill_median on the service CSV: the unique int ``id``
+    has no missing cell, so it stays an int column and the report counts
+    no change in it (pandas keeps such a column int64). A column that
+    holds NULL is still filled."""
+    df = _bench_frame(spark, tmp_path)
+    assert dict(df.dtypes)["id"] in ("int", "bigint")
+    for strategy in ("fill_mean", "fill_median"):
+        pipe = CleaningPipeline(collect_metrics=True)
+        out, report = pipe.run(
+            df, {"missing_values": {"enabled": True, "strategy": strategy}}
+        )
+        op = report["operations"]["missing_values"]
+        assert op["status"] == "success", op
+        assert dict(out.dtypes)["id"] == dict(df.dtypes)["id"], strategy
+        assert "id" not in op["cells_changed"], (strategy, op["cells_changed"])
+        filled = [c for c, n in op["missing_before"].items() if n and dict(df.dtypes)[c] != "string"]
+        assert filled and all(op["missing_after"][c] == 0 for c in filled)
+        pipe.release()
+
+
+@pytest.mark.parametrize(
+    "pattern", ["YYYY-MM-dd", "yyyy-MM-dd E", "yyyy-MM-dd GGGGG"]
+)
+def test_malformed_spark_date_format_is_an_op_error(spark, pattern):
+    """Spark rejects these patterns only when the plan runs. With metrics
+    off and auto_detect off nothing runs inside the op, so the op used to
+    report success and the write then raised SparkUpgradeException. The
+    pattern is now checked when the plan is built."""
+    df = spark.createDataFrame([(0, "2021-03-04"), (1, "x")], f"{ROW_ID} long, d string")
+    out, report = CleaningPipeline().run(
+        df,
+        {"datetime_parsing": {"enabled": True, "columns": ["d"],
+                              "auto_detect": False, "date_format": pattern}},
+    )
+    op = report["operations"]["datetime_parsing"]
+    assert op["status"] == "error" and pattern in op["message"], op
+    assert sorted(map(tuple, out.collect())) == [(0, "2021-03-04"), (1, "x")]
+
+
+def test_date_format_check_starts_no_job(spark):
+    import uuid
+
+    from dataforge_spark.operators.datetime_parsing import _check_pattern
+
+    df = spark.createDataFrame([("2021-03-04",)], "d string")
+    sc = spark.sparkContext
+    group = f"pattern_check_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        _check_pattern(df, "yyyy-MM-dd'T'HH:mm:ss")
+        with pytest.raises(ValueError, match="YYYY"):
+            _check_pattern(df, "YYYY-MM-dd")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
 
 
 def test_strftime_date_format_parses(spark):
