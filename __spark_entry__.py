@@ -147,14 +147,6 @@ def _li_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ev_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
-    return ev.select(
-        "event_id",
-        F.when(F.col("event_id") % 5 == 0, None).otherwise(F.col("value")).alias("value"),
-    )
-
-
 def _docs_with_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents plus a planted duplicate (doc_id+100000) of every 5th
     doc. Explode-planted in ONE scan — the old self-union read the
@@ -1266,23 +1258,6 @@ def q_sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         refine=24, params=sq_params, encoded=sq_codes,
     ).withColumn("variant", F.lit("sq"))
     return exact.unionByName(pq).unionByName(sq)
-
-
-def q_sim_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Planted-NN recovery for hyperplane LSH top-k: queries are the 50
-    perturbed copies (cos ≈ 0.9935 to their original, ≤ ~0.52 to all
-    else), so each query's true nearest neighbor is its original vector.
-    Multi-table LSH must surface that NN in the top-k via bucket
-    collisions alone; filtering the top-k at cos ≥ 0.9 leaves exactly the
-    (query, original) pairs — closed-form in SQL with the same
-    perturbation formula."""
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    q = _perturbed_embeddings(emb)
-    out = lsh_cosine_topk(corpus=emb, queries=q, k=5, id_col="vec_id",
-                          vec_col="embedding", num_planes=12, num_tables=8)
-    return out.where(F.col("cos_sim") >= 0.9)
 
 
 _IVF_CENTROIDS: dict = {}

@@ -701,135 +701,6 @@ def mix_corpora(
     return out
 
 
-def pack_documents_bfd(
-    df: DataFrame,
-    budget: int,
-    id_col: str = "doc_id",
-    text_col: str | None = "text",
-    token_col: str | None = None,
-    n_groups: int | None = None,
-    oversize: str = "error",
-) -> DataFrame:
-    """Whole-document packing by best-fit decreasing: assign each doc
-    to a pack of at most ``budget`` tokens WITHOUT ever splitting a
-    document — the no-attention-bleed alternative to
-    :func:`pack_sequences` (which concatenates and chunks, letting
-    packs cut documents mid-stream). Returns
-    ``(id, n_tokens, pack_id)``; pad each pack to ``budget`` downstream
-    and the waste is ``budget - sum(n_tokens)`` per pack.
-
-    Scale design: docs are hash-bucketed into ``n_groups`` independent
-    groups (deterministic ``xxhash64`` of the id — layout- and
-    retry-stable), and BFD runs per group in ONE ``applyInPandas``
-    (numpy sort + bisect over bin residuals, O(n log n) per group) — so
-    the sequential-by-nature bin packing parallelizes with a bounded,
-    disclosed quality cost: each group packs ≥ (its total / budget)
-    bins, so extra waste vs global BFD is at most ~one partial bin per
-    group; size ``n_groups`` so each group holds ≳1000 budgets' worth.
-    ``pack_id = local_bin * n_groups + group`` is globally unique and
-    deterministic.
-
-    ``oversize``: a doc with more than ``budget`` tokens cannot pack —
-    ``"error"`` raises (chunk first via :func:`chunk_documents`);
-    ``"own_pack"`` gives it a dedicated over-budget pack (truncate
-    downstream).
-    """
-    if budget <= 0:
-        raise ValueError("budget must be positive")
-    if oversize not in ("error", "own_pack"):
-        raise ValueError(f"oversize must be error|own_pack, got {oversize!r}")
-    if token_col is None:
-        if text_col is None:
-            raise ValueError("need text_col or token_col")
-        tok = F.coalesce(token_count(F.col(text_col)), F.lit(0))
-    else:
-        tok = F.coalesce(F.col(token_col), F.lit(0))
-    if n_groups is None:
-        n_groups = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        )
-
-    base = df.select(
-        F.col(id_col).alias("id"),
-        tok.cast("bigint").alias("n_tokens"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_groups)).alias("__g"),
-    )
-
-    def pack_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        import bisect
-
-        g = int(pdf["__g"].iloc[0])
-        # decreasing size, id tiebreak: a total, content-only order
-        pdf = pdf.sort_values(
-            ["n_tokens", "id"], ascending=[False, True]
-        ).reset_index(drop=True)
-        residuals: list = []   # sorted residual capacities
-        bin_of_residual: list = []  # bin id aligned with residuals
-        bins = 0
-        out = []
-        for did, n in zip(pdf["id"], pdf["n_tokens"]):
-            n = int(n)
-            if n > budget:
-                if oversize == "error":
-                    raise ValueError(
-                        f"document {did} has {n} tokens > budget {budget}; "
-                        "chunk_documents first or pass oversize='own_pack'"
-                    )
-                out.append((did, n, bins)); bins += 1
-                continue
-            # best fit: smallest residual that still fits n
-            i = bisect.bisect_left(residuals, n)
-            if i < len(residuals):
-                r = residuals.pop(i)
-                b = bin_of_residual.pop(i)
-            else:
-                r, b = budget, bins
-                bins += 1
-            r -= n
-            j = bisect.bisect_left(residuals, r)
-            residuals.insert(j, r)
-            bin_of_residual.insert(j, b)
-            out.append((did, n, b))
-        res = pd.DataFrame(out, columns=["id", "n_tokens", "local_bin"])
-        res["pack_id"] = res["local_bin"] * n_groups + g
-        return res[["id", "n_tokens", "pack_id"]]
-
-    return base.groupBy("__g").applyInPandas(
-        pack_group, schema="id bigint, n_tokens bigint, pack_id bigint"
-    )
-
-
-def packing_stats(packed: DataFrame, budget: int) -> dict:
-    """Fill-rate report for a packing: packs, fill_rate (token /
-    capacity over non-oversize packs), oversize pack count, and the
-    ``ceil(total/budget)`` lower bound for judging the BFD gap."""
-    agg = (
-        packed.groupBy("pack_id")
-        .agg(F.sum("n_tokens").alias("t"))
-        .agg(
-            F.count(F.lit(1)).alias("packs"),
-            F.sum("t").alias("total"),
-            F.sum(F.when(F.col("t") > budget, 1).otherwise(0)).alias("over"),
-            F.sum(F.when(F.col("t") <= budget, F.col("t"))).alias("in_tok"),
-        )
-        .collect()[0]
-    )
-    packs = int(agg["packs"] or 0)
-    over = int(agg["over"] or 0)
-    total = int(agg["total"] or 0)
-    regular = packs - over
-    return {
-        "packs": packs,
-        "oversize_packs": over,
-        "fill_rate": (
-            round(int(agg["in_tok"] or 0) / (regular * budget), 6)
-            if regular
-            else None
-        ),
-        "lower_bound_packs": -(-total // budget) if total else 0,
-    }
-
-
 def temperature_weights(
     sizes: dict[str, int], alpha: float = 0.3, target_total: int | None = None
 ) -> dict[str, float]:

@@ -68,18 +68,3 @@ def dedup_exact(
     )
     # restore the caller's column order (the struct leads with id)
     return out.select(*df.columns)
-
-
-def duplicate_groups(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """(hash, n_copies, keeper_id) for every content group with >1 copy."""
-    return (
-        df.select(F.md5(F.col(text_col)).alias("content_hash"), F.col(id_col))
-        .groupBy("content_hash")
-        .agg(
-            F.count(F.lit(1)).alias("n_copies"),
-            F.min(id_col).alias("keeper_id"),
-        )
-        .where(F.col("n_copies") > 1)
-    )

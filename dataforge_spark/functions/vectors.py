@@ -27,16 +27,6 @@ def cosine(a: Column, b: Column) -> Column:
     return F.when(denom > 0, dot(a, b) / denom).otherwise(F.lit(0.0))
 
 
-def l2_distance(a: Column, b: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # Arrow-batched scoring — the HOT-PATH variants. The pure-Column versions
 # above are the readable reference implementation (and stay exact for

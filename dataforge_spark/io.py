@@ -49,11 +49,6 @@ def read_parquet(spark: SparkSession, path: str, row_id: bool = False) -> DataFr
     return with_row_id(df) if row_id else df
 
 
-def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one of the driver's testdata tables from an sf directory."""
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
 def write_csv(df: DataFrame, path: str, single_file: bool = False) -> None:
     """CSV sink (S2, /root/reference/pipeline.py:210-211).
 

@@ -103,10 +103,6 @@ def _list_files(
     return sorted(out)
 
 
-def _part_files(path: str, spark: SparkSession | None = None) -> list[str]:
-    return [n for n, _ in _list_files(path, spark)]
-
-
 def table_file_stats(
     path: str,
     small_file_bytes: int = 32 * 1024 * 1024,

@@ -160,14 +160,6 @@ def encode_label(
     return out, mappings
 
 
-def decode_label(df: DataFrame, mappings: dict[str, dict[str, int]]) -> DataFrame:
-    out = df
-    for c, m in mappings.items():
-        inv = F.create_map(*[x for k, v in m.items() for x in (F.lit(v), F.lit(k))])
-        out = out.withColumn(c, inv[qcol(c)])
-    return out
-
-
 def encode_onehot(
     df: DataFrame,
     columns: list[str] | None = None,

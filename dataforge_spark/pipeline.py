@@ -279,25 +279,21 @@ class CleaningPipeline:
         self,
         bug_compat: bool = False,
         collect_metrics: bool = False,
-        persist_intermediate: bool | None = None,
     ):
-        """``persist_intermediate``: persist (MEMORY_AND_DISK) the DataFrame
-        after each op that later ops compute statistics over. Stat-dependent
-        chains (fill→dedup→cap→scale) otherwise re-execute the whole
-        upstream lineage once per statistics job — at 4 stat ops that is 4
-        extra full scans. Default ``None`` = auto: persist a boundary only
-        when ≥2 downstream enabled ops will run driver-side statistics jobs
-        over it (the re-scan count that makes the persist pay for itself).
-        Under ``collect_metrics`` auto persists EVERY op's output, the
-        final one included, before that op's one metrics action
-        (``op_metrics``): the action fills the cache, and the next op's
-        statistics, its metrics action and the caller's write read it
-        instead of recomputing the op. ``True``/``False`` force it —
-        persisting the working set is still a deliberate capacity decision
-        on a real cluster. ``release()`` frees what a run leaves pinned."""
+        """Each op's output is persisted (MEMORY_AND_DISK) when later ops
+        compute statistics over it. Stat-dependent chains
+        (fill→dedup→cap→scale) otherwise re-execute the whole upstream
+        lineage once per statistics job — at 4 stat ops that is 4 extra
+        full scans. A boundary is persisted only when ≥2 downstream enabled
+        ops will run driver-side statistics jobs over it (the re-scan count
+        that makes the persist pay for itself). Under ``collect_metrics``
+        EVERY op's output is persisted, the final one included, before that
+        op's one metrics action (``op_metrics``): the action fills the
+        cache, and the next op's statistics, its metrics action and the
+        caller's write read it instead of recomputing the op. ``release()``
+        frees what a run leaves pinned."""
         self.bug_compat = bug_compat
         self.collect_metrics = collect_metrics
-        self.persist_intermediate = persist_intermediate
         self._pinned: list[DataFrame] = []
 
     @staticmethod
@@ -429,10 +425,7 @@ class CleaningPipeline:
             cfg = operations[name]
             op_report: dict[str, Any] = {"status": "success"}
             logger.info("Running %s operation...", name)
-            if self.persist_intermediate is not None:
-                do_persist = self.persist_intermediate
-            else:
-                do_persist = self.collect_metrics or stat_after[name] >= 2
+            do_persist = self.collect_metrics or stat_after[name] >= 2
             pinned = None
             try:
                 nxt = self._apply_one(current, name, cfg)

@@ -19,17 +19,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import batch_cosine_udf, to_matrix
-
-
-def _planes(dim: int, num_planes: int, seed: int) -> np.ndarray:
-    if num_planes > 62:
-        raise ValueError("num_planes must be <= 62 (int64 bucket-id bits)")
-    rng = np.random.default_rng(seed)
-    return rng.standard_normal((num_planes, dim))
 
 
 def stacked_planes(
@@ -42,9 +35,12 @@ def stacked_planes(
     already astronomically past useful LSH granularity."""
     if num_planes > 62:
         raise ValueError("num_planes must be <= 62 (int64 bucket-id bits)")
-    return np.stack(
-        [_planes(dim, num_planes, seed + 1000 * t) for t in range(num_tables)]
-    )
+    return np.stack([
+        np.random.default_rng(seed + 1000 * t).standard_normal(
+            (num_planes, dim)
+        )
+        for t in range(num_tables)
+    ])
 
 
 def multi_bucket_udf(spark, planes: np.ndarray):
@@ -69,42 +65,6 @@ def multi_bucket_udf(spark, planes: np.ndarray):
         )
 
     return assign_all
-
-
-def bucket_udf(spark, planes: np.ndarray):
-    """Arrow-batched signed-projection bucket id: bit p set iff
-    dot(v, plane_p) > 0."""
-    bc = spark.sparkContext.broadcast(planes)
-    weights = 1 << np.arange(planes.shape[0], dtype=np.int64)
-
-    @F.pandas_udf("long")
-    def assign(v: pd.Series) -> pd.Series:
-        P = bc.value
-        X, bad = to_matrix(v.tolist(), P.shape[1])
-        ids = ((X @ P.T) > 0) @ weights
-        if bad is None:
-            return pd.Series(ids.astype(np.int64))
-        return pd.Series(
-            [None if bad[i] else int(x) for i, x in enumerate(ids)],
-            dtype="Int64",
-        )
-
-    return assign
-
-
-def with_hyperplane_bucket(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    num_planes: int = 16,
-    seed: int = 42,
-    dim: int | None = None,
-    out_col: str = "_bucket",
-) -> DataFrame:
-    if dim is None:
-        dim = len(df.select(vec_col).first()[0])
-    planes = _planes(dim, num_planes, seed)
-    assign = bucket_udf(df.sparkSession, planes)
-    return df.withColumn(out_col, assign(F.col(vec_col)))
 
 
 def lsh_cosine_topk(

@@ -138,50 +138,6 @@ def fit_pca(df: DataFrame, col: str, k: int) -> PcaModel:
     )
 
 
-def random_projection(
-    col, d: int, k: int, seed: int = 0, orthonormal: bool = True
-) -> Column:
-    """Johnson–Lindenstrauss reduction (public lemma): project the
-    ``d``-dim embedding onto ``k`` seeded-Gaussian axes —
-    ``array<double>``, distances preserved within ~sqrt(8 ln n / k)
-    relative error with no fit pass at all. The scale path where exact
-    PCA's d×d moment matrix is too big (d ≳ few thousand): ZERO fit
-    jobs, one Arrow matmul to score, and the matrix regenerates from
-    ``seed`` on every executor (nothing ships but two ints).
-
-    ``orthonormal=True`` QR-orthonormalizes the Gaussian draw (better
-    conditioning at small k; still seed-deterministic) and rescales the
-    basis by ``sqrt(d/k)`` so squared distances are preserved in
-    expectation — without the rescale an orthonormal projection
-    uniformly contracts by ~``sqrt(k/d)``, miscalibrating any absolute
-    Euclidean threshold downstream. NULL/ragged → NULL, matching
-    :func:`project_pca`."""
-    if not 0 < k <= d:
-        raise ValueError(f"need 0 < k <= d, got k={k} d={d}")
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<double>")
-    def proj(s):
-        rng = np.random.default_rng(seed)
-        m = rng.standard_normal((d, k))
-        if orthonormal:
-            # sqrt(d/k): JL isometry-in-expectation rescale (see
-            # docstring) — QR alone contracts by ~sqrt(k/d)
-            m, _ = np.linalg.qr(m)
-            m = m * np.sqrt(d / k)
-        else:
-            m = m / np.sqrt(k)
-
-        def one(v):
-            if v is None or len(v) != d:
-                return None
-            return (np.asarray(v, dtype=np.float64) @ m).tolist()
-
-        return s.map(one)
-
-    return proj(F.col(col) if isinstance(col, str) else col)
-
-
 def project_pca(col, model: PcaModel, whiten: bool = False) -> Column:
     """Project the embedding column onto the model's ``k`` axes
     (``array<double>``): one Arrow batch matmul. NULL/ragged vectors →

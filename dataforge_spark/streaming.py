@@ -56,12 +56,11 @@ class _ephemeral_drain_confs:
     state-store maintenance (snapshot compaction for faster RESTART
     recovery) and deep commit-log retention (replay history a fresh
     checkpoint will never read) are pure overhead. r14 interleaved A/B
-    on the stream_sjoin drain (tools/ab_stream_floor.py, min-of-4,
-    identical checksums): defaults 2.201 s / maintenance-off 2.151 /
-    retention-2 2.097 / both 2.078 — a small, directionally consistent
-    ~0.1 s of avoidable machinery per drain. Confs are captured and
-    restored so long-running production streams started from the same
-    session are untouched."""
+    on the stream_sjoin drain (min-of-4, identical checksums): defaults
+    2.201 s / maintenance-off 2.151 / retention-2 2.097 / both 2.078 —
+    a small, directionally consistent ~0.1 s of avoidable machinery per
+    drain. Confs are captured and restored so long-running production
+    streams started from the same session are untouched."""
 
     _CONFS = {
         "spark.sql.streaming.stateStore.maintenanceInterval": "3600s",

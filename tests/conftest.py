@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -8,6 +9,27 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from dataforge_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+def persisted_rdd_ids(spark):
+    """Ids of the RDDs the SparkContext holds persisted right now. A leak
+    check compares these sets, not their sizes: RDDs that other tests
+    left persisted can be freed while a test runs."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def count_jobs(spark, action):
+    """Run ``action()`` under a job group of its own and return how many
+    Spark jobs it started."""
+    sc = spark.sparkContext
+    group = f"count_jobs_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="session")

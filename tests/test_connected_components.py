@@ -3,6 +3,7 @@ chain case where greedy edge-wise dedup over-deletes."""
 
 from pyspark.sql import functions as F
 
+from conftest import count_jobs
 from dataforge_spark.dedup.components import (
     connected_components,
     dedup_by_components,
@@ -157,19 +158,9 @@ def test_string_ids_cost_no_more_jobs_than_integral_ids(spark):
     integral ids. A limit action there (isEmpty) computed only part of
     the round's lazy checkpoint, and the checkpoint then ran a fill-in
     job for the rest (81 jobs on this chain against 71 for long ids)."""
-    import uuid
-
-    sc = spark.sparkContext
-
     def jobs(edges, schema):
-        group = f"cc_jobs_{uuid.uuid4().hex}"
-        sc.setJobGroup(group, group)
-        try:
-            connected_components(spark.createDataFrame(edges, schema)).collect()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
+        return count_jobs(spark, lambda: connected_components(
+            spark.createDataFrame(edges, schema)).collect())
 
     ints = [(i, i + 1) for i in range(64)]
     strs = [(f"n{a:03d}", f"n{b:03d}") for a, b in ints]

@@ -15,6 +15,7 @@ from http.client import HTTPConnection
 
 import pytest
 
+from conftest import persisted_rdd_ids
 from dataforge_spark.http_server import FRONTEND_PATH, serve_background
 
 
@@ -227,8 +228,7 @@ def test_sequential_requests_leave_no_cached_frames(spark, server):
     """Many /clean-data requests in one long-lived session: every request
     releases what its pipeline cached, and every output still downloads
     whole (the write reads the cache before it is released)."""
-    persistent = spark.sparkContext._jsc.sc().getPersistentRDDs
-    start = persistent().size()
+    start = persisted_rdd_ids(spark)
     ops = {
         "missing_values": {"enabled": True, "strategy": "fill_mean"},
         "duplicates": {"enabled": True},
@@ -247,7 +247,7 @@ def test_sequential_requests_leave_no_cached_frames(spark, server):
         r, data = _get(server, cleaned["download_url"])
         assert r.status == 200
         outputs.append(data)
-    assert persistent().size() == start
+    assert not persisted_rdd_ids(spark) - start
     lines = outputs[0].decode().strip().splitlines()
     assert lines[0] == "name,qty,price" and len(lines) == 1 + 3
     assert all(o == outputs[0] for o in outputs)

@@ -3,11 +3,10 @@ front of it (``quality_filter(docs).where("keep")``, a plan with its own
 shuffles) must run once, not once per read, and the survivors must not
 depend on whether the input is such a plan or a plain scan."""
 
-import uuid
-
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import count_jobs
 from dataforge_spark.curation import quality_filter
 from dataforge_spark.dedup.minhash import minhash_dedup
 
@@ -55,18 +54,6 @@ def test_survivors_match_a_parquet_copy_of_the_input(gate_and_copy, transitive):
     assert len(from_copy) <= copy.count() - n_copies
 
 
-def _jobs(spark, action):
-    sc = spark.sparkContext
-    group = f"minhash_input_{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_input_plan_runs_once(spark, gate_and_copy):
     """Deduping the gate's plan may start at most the jobs of deduping
     the Parquet copy plus those of running the gate once. Re-running the
@@ -74,7 +61,7 @@ def test_input_plan_runs_once(spark, gate_and_copy):
     the parallelism gates' ``df.rdd``) costs about five gate runs."""
     gate, copy = gate_and_copy
     minhash_dedup(gate()).collect()  # first-run planning noise out
-    on_plan = _jobs(spark, lambda: minhash_dedup(gate()).collect())
-    on_copy = _jobs(spark, lambda: minhash_dedup(copy).collect())
-    once = _jobs(spark, lambda: gate().collect())
+    on_plan = count_jobs(spark, lambda: minhash_dedup(gate()).collect())
+    on_copy = count_jobs(spark, lambda: minhash_dedup(copy).collect())
+    once = count_jobs(spark, lambda: gate().collect())
     assert on_plan <= on_copy + once, (on_plan, on_copy, once)

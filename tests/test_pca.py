@@ -109,52 +109,3 @@ def test_validation(spark):
     empty = spark.createDataFrame([], "embedding array<double>")
     with pytest.raises(ValueError):
         fit_pca(empty, "embedding", k=1)
-
-
-def test_random_projection_jl(spark):
-    from dataforge_spark.similarity.pca import random_projection
-
-    x = _data(seed=11)
-    df = _df(spark, x, parts=3)
-    out = {r["vec_id"]: r["p"] for r in df.select(
-        "vec_id", random_projection("embedding", D, 8, seed=4).alias("p")
-    ).collect()}
-    p = np.array([out[i] for i in range(len(x))])
-    assert p.shape == (N, 8)
-
-    # deterministic across layouts and re-invocations
-    out2 = {r["vec_id"]: r["p"] for r in _df(spark, x, parts=11).select(
-        "vec_id", random_projection("embedding", D, 8, seed=4).alias("p")
-    ).collect()}
-    assert all(np.allclose(out[i], out2[i]) for i in range(len(x)))
-    # a different seed gives a different projection
-    out3 = {r["vec_id"]: r["p"] for r in df.select(
-        "vec_id", random_projection("embedding", D, 8, seed=5).alias("p")
-    ).collect()}
-    assert not np.allclose(np.array([out3[i] for i in range(5)]),
-                           np.array([out[i] for i in range(5)]))
-
-    # JL property: pairwise distances preserved in expectation — the
-    # sqrt(d/k) rescale makes the ratio center near 1 instead of the
-    # sqrt(k/d)≈0.82 contraction of a bare orthonormal projection
-    # (k=8 of 12 dims; generous band)
-    rng = np.random.default_rng(0)
-    idx = rng.integers(0, N, size=(200, 2))
-    orig = np.linalg.norm(x[idx[:, 0]] - x[idx[:, 1]], axis=1)
-    proj = np.linalg.norm(p[idx[:, 0]] - p[idx[:, 1]], axis=1)
-    mask = orig > 1e-9
-    ratio = proj[mask] / orig[mask]
-    assert 0.85 < np.median(ratio) < 1.15
-    # hard bound: no pair stretched beyond the full-rank rescale factor
-    assert ratio.max() <= np.sqrt(D / 8) + 1e-9
-
-    # nulls/ragged and validation
-    bad = spark.createDataFrame(
-        [(1, None), (2, [1.0])], "vec_id bigint, embedding array<double>"
-    )
-    got = {r["vec_id"]: r["p"] for r in bad.select(
-        "vec_id", random_projection("embedding", D, 4).alias("p")
-    ).collect()}
-    assert got == {1: None, 2: None}
-    with pytest.raises(ValueError):
-        random_projection("embedding", D, 0)

@@ -5,6 +5,7 @@ and methods/duplicate.py:50-59), opt-in under collect_metrics."""
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import count_jobs, persisted_rdd_ids
 from dataforge_spark.io import ROW_ID
 from dataforge_spark.pipeline import CleaningPipeline, cells_changed
 
@@ -224,19 +225,12 @@ def test_op_metrics_matches_separate_actions(spark, tmp_path):
 
 
 def _run_jobs(spark, df, ops, metrics):
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"pipeline_run_{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
+    def run():
         pipe = CleaningPipeline(collect_metrics=metrics)
         pipe.run(df, ops)
         pipe.release()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count_jobs(spark, run)
 
 
 def test_metrics_cost_at_most_four_jobs_per_op(spark, tmp_path):
@@ -253,8 +247,7 @@ def test_metrics_cost_at_most_four_jobs_per_op(spark, tmp_path):
 
 
 def test_release_unpersists_what_run_pinned(spark):
-    sc = spark.sparkContext._jsc.sc()
-    start = sc.getPersistentRDDs().size()
+    start = persisted_rdd_ids(spark)
     pipe = CleaningPipeline(collect_metrics=True)
     out, report = pipe.run(
         _golden(spark),
@@ -262,9 +255,10 @@ def test_release_unpersists_what_run_pinned(spark):
          "duplicates": {"enabled": True}},
     )
     assert out.count() == 4  # rows 3 and 4 are duplicates
-    assert sc.getPersistentRDDs().size() == start + 1  # the final boundary
+    pinned = persisted_rdd_ids(spark) - start
+    assert len(pinned) == 1  # the final boundary
     pipe.release()
-    assert sc.getPersistentRDDs().size() == start
+    assert not pinned & persisted_rdd_ids(spark)
     assert out.count() == 4  # still usable, recomputed
 
 
@@ -277,8 +271,7 @@ def test_metrics_action_failure_is_an_op_error(spark, monkeypatch):
     from dataforge_spark.operators import datetime_parsing
 
     monkeypatch.setattr(datetime_parsing, "_check_pattern", lambda df, pattern: None)
-    sc = spark.sparkContext._jsc.sc()
-    start = sc.getPersistentRDDs().size()
+    start = persisted_rdd_ids(spark)
     df = spark.createDataFrame([(0, "2020-01-01"), (1, "x")], f"{ROW_ID} long, d string")
     pipe = CleaningPipeline(collect_metrics=True)
     out, report = pipe.run(
@@ -288,7 +281,7 @@ def test_metrics_action_failure_is_an_op_error(spark, monkeypatch):
     )
     assert report["operations"]["datetime_parsing"]["status"] == "error"
     assert out.columns == df.columns and out.count() == 2
-    assert sc.getPersistentRDDs().size() == start
+    assert not persisted_rdd_ids(spark) - start
     pipe.release()
 
 
@@ -333,22 +326,16 @@ def test_malformed_spark_date_format_is_an_op_error(spark, pattern):
 
 
 def test_date_format_check_starts_no_job(spark):
-    import uuid
-
     from dataforge_spark.operators.datetime_parsing import _check_pattern
 
     df = spark.createDataFrame([("2021-03-04",)], "d string")
-    sc = spark.sparkContext
-    group = f"pattern_check_{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
+
+    def check():
         _check_pattern(df, "yyyy-MM-dd'T'HH:mm:ss")
         with pytest.raises(ValueError, match="YYYY"):
             _check_pattern(df, "YYYY-MM-dd")
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+    assert count_jobs(spark, check) == 0
 
 
 def test_strftime_date_format_parses(spark):

@@ -1,7 +1,7 @@
 """Examine the oracle-only queries (the ~18 declared rows the headline
 bench does not time): min-of-N wall through the noop sink plus the Spark
 job count per invocation (jobs counted via a dedicated job group), with
-steal% sampled around each row like tools/time_query.py.
+the host's CPU steal% sampled around each row.
 
 The benched rows get this scrutiny from bench.py; this closes the gap
 for the rest of ``queries()`` so the per-operator optimization log can
