@@ -1314,14 +1314,14 @@ def q_sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                            centroids=_IVF_CENTROIDS[key])
 
 
-def build_ivf_disk_index(spark: SparkSession, sf_dir: str) -> tuple[str, float]:
+def build_ivf_disk_index(spark: SparkSession, sf_dir: str) -> tuple[str, float | None]:
     """Build (or reuse) the on-disk IVF index for ``sf_dir``'s embeddings.
 
     The index path is keyed on the INPUT's identity (path + mtime + size,
     stable hash), so repeated calls against unchanged testdata reuse the
     index — an on-disk index is by design a once-per-corpus amortized
     cost, and conflating it with every search mis-states both numbers.
-    Returns (path, build_seconds) with build_seconds == 0.0 on reuse.
+    Returns (path, build_seconds) with build_seconds None on reuse.
     """
     import os as _os
     import time as _time
@@ -1332,7 +1332,7 @@ def build_ivf_disk_index(spark: SparkSession, sf_dir: str) -> tuple[str, float]:
     if _os.path.exists(
         _os.path.join(path, "vectors", "_SUCCESS")
     ) and _os.path.exists(_os.path.join(path, "centroids", "_SUCCESS")):
-        return path, 0.0
+        return path, None
     emb = _t(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
@@ -1341,13 +1341,13 @@ def build_ivf_disk_index(spark: SparkSession, sf_dir: str) -> tuple[str, float]:
     return path, round(_time.time() - t0, 3)
 
 
-def build_zorder_layout(spark: SparkSession, sf_dir: str) -> tuple[str, float]:
+def build_zorder_layout(spark: SparkSession, sf_dir: str) -> tuple[str, float | None]:
     """Build (or reuse) the Z-ordered copy of ``sf_dir``'s documents —
     the same once-per-corpus amortization and path+mtime+size
     fingerprint as the IVF/PQ index builds (VERDICT r11 task 4: a
     once-per-corpus LAYOUT write inside a per-query timed row misprices
     both; bench reports it as ``zorder_write_sec``, the row times the
-    read side). Returns (path, build_seconds), 0.0 on reuse."""
+    read side). Returns (path, build_seconds), None on reuse."""
     import os as _os
     import time as _time
 
@@ -1355,7 +1355,7 @@ def build_zorder_layout(spark: SparkSession, sf_dir: str) -> tuple[str, float]:
 
     path = f"/tmp/dataforge_zorder_{_corpus_ident(sf_dir, 'documents')}"
     if _os.path.exists(_os.path.join(path, "_SUCCESS")):
-        return path, 0.0
+        return path, None
     docs = _t(spark, sf_dir, "documents")
     t0 = _time.time()
     zorder_write(
@@ -1365,11 +1365,11 @@ def build_zorder_layout(spark: SparkSession, sf_dir: str) -> tuple[str, float]:
     return path, round(_time.time() - t0, 3)
 
 
-def build_pq_index(spark: SparkSession, sf_dir: str) -> tuple[str, float]:
+def build_pq_index(spark: SparkSession, sf_dir: str) -> tuple[str, float | None]:
     """Build (or reuse) the persisted PQ index (codes + codebook sidecar)
     for ``sf_dir``'s embeddings — the same once-per-corpus amortization
     and path+mtime+size fingerprint as ``build_ivf_disk_index``. Returns
-    (path, build_seconds); 0.0 when an index for this fingerprint already
+    (path, build_seconds); None when an index for this fingerprint already
     exists."""
     import os as _os
     import time as _time
@@ -1380,7 +1380,7 @@ def build_pq_index(spark: SparkSession, sf_dir: str) -> tuple[str, float]:
     if _os.path.exists(
         _os.path.join(path, "codes", "_SUCCESS")
     ) and _os.path.exists(_os.path.join(path, "codebooks", "_SUCCESS")):
-        return path, 0.0
+        return path, None
     emb = _t(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
@@ -1389,12 +1389,13 @@ def build_pq_index(spark: SparkSession, sf_dir: str) -> tuple[str, float]:
     return path, round(_time.time() - t0, 3)
 
 
-def build_sq_index(spark: SparkSession, sf_dir: str) -> tuple[str, float]:
+def build_sq_index(spark: SparkSession, sf_dir: str) -> tuple[str, float | None]:
     """Build (or reuse) the persisted SQ8 index (byte codes + per-dim
     range params sidecar) for ``sf_dir``'s embeddings — same
     once-per-corpus amortization and fingerprint as ``build_pq_index``.
     The SQ fit is aggregate-exact (per-dim min/max), so the index is a
-    pure function of corpus content."""
+    pure function of corpus content. Returns (path, build_seconds), None
+    on reuse."""
     import os as _os
     import time as _time
 
@@ -1404,7 +1405,7 @@ def build_sq_index(spark: SparkSession, sf_dir: str) -> tuple[str, float]:
     if _os.path.exists(
         _os.path.join(path, "codes", "_SUCCESS")
     ) and _os.path.exists(_os.path.join(path, "params", "_SUCCESS")):
-        return path, 0.0
+        return path, None
     emb = _t(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )

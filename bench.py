@@ -7,6 +7,13 @@ Each query is forced through the noop sink (``format("noop")``) so the
 FULL projection executes — ``count()`` would let Catalyst prune away the
 computed columns and measure nothing.
 
+Noise control is the same for every row and carries no per-row
+reference: each row records its best of N runs (2 at sf0.1, 3 at sf1),
+and the whole row loop sits between two calibrations of a fixed
+reference job (``calibration_sec``). When either calibration is off
+steady, the loop runs once more and the attempt with the quieter
+calibrations is recorded.
+
 Besides the sf0.1 per-query timings, the line carries a ``crossover``
 section: the SAME operator (IQR cap + standard scale, exact percentiles)
 timed on generated data at $SPARK_GRAFT_XROWS rows (default 6M — the
@@ -37,31 +44,19 @@ from dataforge_spark.session import get_spark  # noqa: E402
 # the number that scales. wall_sec in the output keeps the honest total.
 RUNS_PER_QUERY = 2
 
-# Steady-state calibration ceilings for the contention-aware retries
-# (shared by the sf0.1 headline loop and the sf1 paired block): the
-# fixed reference job runs ~0.10-0.15 s Spark-side and the pandas numpy
-# twin ~0.65 s on a quiet host; a phase whose [pre, post] calibrations
-# exceed these re-runs once and the cleanest attempt is recorded.
-#
-# Every Spark-side reference below (this ceiling, STEADY_REF,
-# SF1_STEADY_REF, XHUGE_LEG_REF) was measured at local[32]. The driver
-# ALSO runs this bench at a lower core count to measure scaling; there
-# the calibration job and the parallel rows slow down by up to
-# 32/cpus, which is core scaling, not co-tenant contention — without
-# the scale factor the guards would mass-trigger, re-measuring clean
-# rows and filling contended_rows with junk. Scaling the trip points
-# by the linear bound makes the guard deliberately conservative away
-# from its 32-core measurement point (sub-linear rows sit below the
-# scaled refs); the pandas twin is single-threaded and needs no
-# scaling.
+# Steady-state calibration ceilings for the loop-level re-run (shared by
+# the sf0.1 headline loop and the sf1 paired block): the fixed reference
+# job runs ~0.10-0.15 s Spark-side at local[32] and the pandas numpy twin
+# ~0.65 s on a quiet host; a loop whose [pre, post] calibrations exceed
+# these re-runs once and the quieter attempt is recorded.
 _REF_CPUS = 32
 
 
 def _available_cpus() -> int:
     """CPUs actually available to this process: cgroup/affinity-aware
-    (ADVICE r13 item 2 — os.cpu_count() reports HOST logical CPUs, so a
-    driver lowering cores via cpuset/taskset instead of
-    SPARK_GRAFT_CPUS would leave the guard scale at 1.0 while local[32]
+    (os.cpu_count() reports HOST logical CPUs, so a run that lowers
+    cores via cpuset/taskset instead of SPARK_GRAFT_CPUS would leave the
+    calibration ceiling at its 32-core value while local[32]
     oversubscribes)."""
     try:
         return len(os.sched_getaffinity(0)) or _REF_CPUS
@@ -70,10 +65,10 @@ def _available_cpus() -> int:
 
 
 def _parse_cpus(raw: str | None) -> int:
-    """SPARK_GRAFT_CPUS, tolerantly (ADVICE r13 item 1): session.py
-    passes the value verbatim into local[{cpus}], where non-numeric
-    forms like '*' are legal — the bench must not crash at import on
-    what the session accepts. Non-numeric → the affinity count."""
+    """SPARK_GRAFT_CPUS, tolerantly: session.py passes the value verbatim
+    into local[{cpus}], where non-numeric forms like '*' are legal — the
+    bench must not crash at import on what the session accepts.
+    Non-numeric → the affinity count."""
     if raw is not None:
         try:
             return int(raw)
@@ -83,101 +78,15 @@ def _parse_cpus(raw: str | None) -> int:
 
 
 _BENCH_CPUS = _parse_cpus(os.environ.get("SPARK_GRAFT_CPUS"))
-# Sub-linear (sqrt) core scaling of the trip points (ADVICE r13 item 4):
-# the r13 8-vs-32-core driver run measured every sf0.1 row FLAT to
-# FASTER at 8 cores (ratios 0.49-1.36), so a LINEAR 32/cpus bound made
-# every guard 4x and effectively inert at low core counts — real
-# co-tenant contention would pass unflagged. sqrt keeps low-core
-# headroom for the few rows that do lean on cores (x_text 1.36x at 8)
-# while leaving the guards meaningful: at 8 cores thresholds are 2x,
-# not 4x.
+# The calibration job is parallel, so below 32 cores it slows down with
+# the core count, not with co-tenant load. The ceiling follows the sqrt
+# of the core ratio (the r13 8-vs-32-core run measured the sf0.1 rows
+# flat to faster at 8 cores; a linear bound would make the check inert
+# at low core counts). The pandas twin is single-threaded and needs no
+# scaling.
 _CORE_SCALE = max(1.0, (_REF_CPUS / max(1, _BENCH_CPUS)) ** 0.5)
 SPARK_CAL_STEADY = 0.35 * _CORE_SCALE
 PANDAS_CAL_STEADY = 1.0
-
-# Per-row steady-state references for the per-row contention guard
-# (VERDICT r11 task 1; refreshed per VERDICT r12 task 8 — stale
-# references under-trigger on rows that legitimately got faster).
-# Values: max of the TWO end-of-r13 quiet-host runs (steal 0.00-0.01%,
-# calibrations 0.10-0.13, contended_rows {}, totals 32.411 / 32.504 —
-# 0.3% apart), rounded up to the next 0.05 s. Every r13-optimized row
-# moved, so the whole table is re-baselined rather than patched
-# rowwise. These are GUARD thresholds, not oracles — a genuinely
-# regressed row still records its measured value after re-measures
-# confirm the host was quiet.
-STEADY_REF = {
-    "s4_profile": 1.35, "s4_profile_approx": 0.85,
-    # m5_m6/o6_o7/pipeline: r13 dropped exact_quantiles' small-input
-    # percentile tier (f6db425)
-    "m5_m6_fill_stats": 1.65, "m8_m9_ordered_fill": 0.65,
-    "d1_dedup_keep_first": 0.40,
-    "o6_o7_outlier_actions": 0.90,
-    "t234_auto_convert": 2.00, "x_text_suite": 1.40,
-    "dt1_datetime_features": 0.70,
-    # e2: r13 domain-pairs checkpoint (3333668)
-    "e2_onehot_encode": 0.60,
-    "y1_common_typos": 0.50, "n1_n5_standard_roundtrip": 0.80,
-    "dedup_exact_intercorpus": 0.45, "dedup_spans": 0.95,
-    # minhash/jaccard: r13 candidate-pruned verify + no-job shingle
-    # gate (056c223, 0fd780a)
-    "dedup_minhash_verified": 2.70, "dedup_jaccard_pairs": 1.55,
-    "sim_cosine_topk": 0.70, "sim_pq_topk": 1.70, "sim_ivf_topk": 0.40,
-    # txt_metrics: struct-once projection + vocab checkpoint (3773ee9)
-    # + single-pass Gopher codegen (e9a033d)
-    "txt_metrics": 1.90, "stream_sessionize_native": 0.40,
-    "stream_sessionize_stateful": 1.65,
-    "pipeline_e2e": 1.15,
-    "join_asof": 0.45, "join_range": 1.60,
-    # curation_split: includes the dsir_w/dsir_sel legs (zero-shuffle
-    # after c3483a1)
-    "curation_split": 0.80,
-    "curation_contamination": 0.95,
-    # curation_pack: shared window exchange (4f2424a)
-    "curation_pack": 0.45,
-    "stream_window_agg": 1.25, "o4_isolation_forest": 1.35,
-    "sim_ivf_disk_topk": 0.75, "stream_sjoin": 1.90,
-}
-# a row re-measures while it exceeds this multiple of its reference AND
-# a calibration probe confirms the host is off steady state
-ROW_GUARD_FACTOR = 3.0
-ROW_GUARD_RETRIES = 2
-
-# sf1 per-row references (VERDICT r12 task 3: the headline loop got the
-# per-row guard in r12, but the sf1 rows still slipped contended values
-# into the artifact — stream_sjoin 9.2 s vs the committed 3.3 s behind
-# a 0.32 post-calibration). Values: the r12 committed sf1 block where
-# it ran quiet, the builder's committed values for the two rows the
-# driver re-run caught contended (stream_sjoin 3.3; m8_m9 — r13
-# decomposition). The sf1 loop is already best-of-3 per row, so a 2x
-# excess over steady is a stronger contention signal than the
-# headline's single-shot 3x.
-# Values (r14, ADVICE r13 item 3 — the r13 table left some refs BELOW
-# honestly-measured quiet rows, e.g. m5_m6 ref 1.20 vs 1.95 measured):
-# per-row MAX over the two committed quiet sf1 runs — the builder's
-# end-of-r13 single pass (b97c69e bench_detail, calibrations
-# [0.137, 0.134]) and the driver's r13 run (cd34d96 bench_detail,
-# calibrations [0.137, 0.134], 13/13 fold checks) — rounded UP to the
-# next 0.05 s. The two runs differ up to ~2x on some rows (different
-# host weather/page-cache state); taking the max keeps these as
-# re-measure trip points that honest quiet runs cannot trip.
-SF1_STEADY_REF = {
-    "s4_profile": 1.65, "s4_profile_approx": 0.75,
-    "m5_m6_fill_stats": 1.95, "m8_m9_ordered_fill": 3.35,
-    "d1_dedup_keep_first": 0.70, "o6_o7_outlier_actions": 1.70,
-    "t234_auto_convert": 2.45, "x_text_suite": 1.50,
-    "dt1_datetime_features": 0.60, "e2_onehot_encode": 0.75,
-    "y1_common_typos": 0.55, "n1_n5_standard_roundtrip": 1.15,
-    "dedup_exact_intercorpus": 0.80, "dedup_spans": 1.50,
-    "dedup_minhash_verified": 3.95, "dedup_jaccard_pairs": 8.75,
-    "sim_cosine_topk": 0.65, "sim_pq_topk": 2.90, "sim_ivf_topk": 0.60,
-    "txt_metrics": 5.70, "stream_sessionize_native": 0.60,
-    "stream_sessionize_stateful": 3.55, "pipeline_e2e": 2.80,
-    "join_asof": 0.95, "join_range": 1.65, "curation_split": 1.85,
-    "curation_contamination": 1.50, "curation_pack": 0.70,
-    "stream_window_agg": 1.35, "o4_isolation_forest": 3.45,
-    "sim_ivf_disk_topk": 0.70, "stream_sjoin": 4.35,
-}
-SF1_ROW_GUARD_FACTOR = 2.0
 
 # Headline set: one per operator family + the scale-relevant extensions.
 BENCH_QUERIES = [
@@ -233,6 +142,17 @@ def _noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def _best_of(n: int, fn) -> float:
+    """Smallest wall time of ``n`` runs of ``fn()``, in seconds rounded
+    to the millisecond."""
+    best = float("inf")
+    for _ in range(n):
+        t0 = time.time()
+        fn()
+        best = min(best, time.time() - t0)
+    return round(best, 3)
+
+
 def _s4_profile_approx(spark, sf_dir):
     """The profiler's production path: HyperLogLog++ distinct sketches
     (fixed KB of aggregate state per column) instead of exact
@@ -251,41 +171,64 @@ def _s4_profile_approx(spark, sf_dir):
     return profile_df(ev, columns=["value", "props"], approx=True)
 
 
-def crossover_bench(spark, n_rows: int) -> dict:
-    """Four operator classes on n_rows of generated data, Spark operators
-    vs the pandas/numpy equivalent — the apples-to-apples compute
-    comparison at the scale where engine design starts to matter:
+def bench_queries() -> dict:
+    """The query registry the bench times: ``entry.queries()`` plus the
+    bench-only rows. ``sim_cosine_topk`` keeps its own row although the
+    registry slot was folded into ``sim_pq_topk``; the sessionize,
+    window-aggregate and stream-join legs are timed separately while the
+    registry keeps their union rows for the oracle gate."""
+    qs = dict(entry.queries())
+    qs.update(
+        s4_profile_approx=_s4_profile_approx,
+        sim_cosine_topk=entry.q_sim_cosine_topk,
+        stream_sessionize_native=entry.q_stream_sessionize_native,
+        stream_sessionize_stateful=entry.q_stream_sessionize_stateful,
+        stream_window_agg=entry.q_stream_wagg_only,
+        stream_sjoin=entry.q_stream_sjoin_only,
+    )
+    return qs
+
+
+def _spark_legs(spark, n_rows: int) -> tuple[dict, object]:
+    """The four Spark operator legs the crossover blocks share, as
+    ``name -> thunk`` over ``n_rows`` of generated data, plus the
+    50%-duplicate ``(k, v)`` frame the dedup legs read:
 
     - iqr_cap / standard_scale: statistics + projection (o6/n1);
     - dedup: shuffle-bound keep-first over a 50%-duplicate key space (d1);
-    - distinct_count: the profiler's per-column cardinality (s4).
-    """
-    import numpy as np
-    import pandas as pd
+    - distinct_count: the profiler's per-column cardinality (s4)."""
     from pyspark.sql import functions as F
 
-    from dataforge_spark.operators.outliers import handle_outliers
     from dataforge_spark.operators.normalization import normalize_data
+    from dataforge_spark.operators.outliers import handle_outliers
 
     gen = spark.range(n_rows).select(
         "id", (F.sin(F.col("id").cast("double")) * 1000 + 5000).alias("price")
     )
-    t0 = time.time()
-    _noop(handle_outliers(gen, columns=["price"], method="iqr", action="cap"))
-    spark_cap = round(time.time() - t0, 3)
-    t0 = time.time()
-    _noop(normalize_data(gen, columns=["price"], method="standard")[0])
-    spark_scale = round(time.time() - t0, 3)
-    # 50%-duplicate bigint key: the d1 shuffle path
     dup = spark.range(n_rows).select((F.col("id") % (n_rows // 2)).alias("k"),
                                      (F.col("id") % 97).alias("v"))
-    t0 = time.time()
-    _noop(dup.groupBy("k").agg(F.min("v").alias("v")))
-    spark_dedup = round(time.time() - t0, 3)
-    t0 = time.time()
-    _noop(dup.agg(F.count_distinct("k").alias("n"),
-                  F.count_distinct("v").alias("m")))
-    spark_distinct = round(time.time() - t0, 3)
+    return {
+        "iqr_cap": lambda: _noop(handle_outliers(
+            gen, columns=["price"], method="iqr", action="cap")),
+        "standard_scale": lambda: _noop(normalize_data(
+            gen, columns=["price"], method="standard")[0]),
+        "dedup": lambda: _noop(dup.groupBy("k").agg(F.min("v").alias("v"))),
+        "distinct_count": lambda: _noop(dup.agg(
+            F.count_distinct("k").alias("n"),
+            F.count_distinct("v").alias("m"))),
+    }, dup
+
+
+def crossover_bench(spark, n_rows: int) -> dict:
+    """The four ``_spark_legs`` operator classes on n_rows of generated
+    data, Spark operators vs the pandas/numpy equivalent — the
+    apples-to-apples compute comparison at the scale where engine design
+    starts to matter."""
+    import numpy as np
+    import pandas as pd
+
+    legs, _ = _spark_legs(spark, n_rows)
+    spark_sec = {name: _best_of(1, fn) for name, fn in legs.items()}
 
     ids = np.arange(n_rows, dtype=np.float64)
     price = np.sin(ids) * 1000 + 5000
@@ -310,56 +253,18 @@ def crossover_bench(spark, n_rows: int) -> dict:
 
     return {
         "rows": n_rows,
-        "spark_sec": {"iqr_cap": spark_cap, "standard_scale": spark_scale,
-                      "dedup": spark_dedup, "distinct_count": spark_distinct},
+        "spark_sec": spark_sec,
         "pandas_sec": {"iqr_cap": pandas_cap, "standard_scale": pandas_scale,
                        "dedup": pandas_dedup, "distinct_count": pandas_distinct},
     }
 
 
-# Per-leg steady references for the 600M block's re-measure rule
-# (VERDICT r12 task 3): a leg above XHUGE_GUARD_FACTOR x its reference
-# triggers a calibration probe; off-steady probe => the number is
-# weather, re-run the leg once and keep the min (attempts recorded).
-# Re-baselined end-of-r13 to the standalone quiet-host block
-# (steal 0.00%: iqr 19.1, scale 3.4, dedup 68.3, repart 24.8,
-# distinct 36.6, approx 2.2, bucketed 10.4 — data-sized shuffle
-# partitions + steal-free host; the old r12-era values sat 2-17x high
-# and let a 3.4x-elevated distinct_count pass unflagged), with ~25%
-# margin. Values are 32-core; the _CORE_SCALE bound above applies at
-# lower core counts.
-XHUGE_LEG_REF = {
-    "iqr_cap": 24.0, "standard_scale": 4.5, "dedup": 85.0,
-    "distinct_count": 46.0, "distinct_approx": 3.0,
-    "dedup_repart": 31.0,
-    # bucketed: the only disk-read leg (3.3 GB layout). 10-13 s with
-    # the layout page-cached (just written), ~31 s cold at this box's
-    # ~106 MB/s disk — the ref spans the band so an honest cold read
-    # does not trip as weather.
-    "dedup_bucketed": 16.0,
-}
-XHUGE_GUARD_FACTOR = 2.0
-
-# Apply the core-count bound to every Spark-side reference table (see
-# the _CORE_SCALE comment above SPARK_CAL_STEADY): trip points follow
-# the measurement conditions, contended_rows["ref"] records the trip
-# point actually used.
-if _CORE_SCALE != 1.0:
-    STEADY_REF = {k: round(v * _CORE_SCALE, 3) for k, v in STEADY_REF.items()}
-    SF1_STEADY_REF = {
-        k: round(v * _CORE_SCALE, 3) for k, v in SF1_STEADY_REF.items()
-    }
-    XHUGE_LEG_REF = {
-        k: round(v * _CORE_SCALE, 3) for k, v in XHUGE_LEG_REF.items()
-    }
-
-
 def crossover_spark_only(spark, n_rows: int) -> dict:
-    """Next-decade probe (VERDICT r11 task 9): the crossover block's
-    operator classes Spark-only at ≥600 M rows — the 6M/60M paired
-    blocks already bracket the pandas crossover; at this scale the
-    single-core baseline is minutes of wall for no added signal, so the
-    evidence is absolute throughput (rows/sec) holding up another 10×.
+    """The crossover block's operator classes Spark-only at ≥600 M rows —
+    the 6M/60M paired blocks already bracket the pandas crossover; at
+    this scale the single-core baseline is minutes of wall for no added
+    signal, so the evidence is absolute throughput (rows/sec) holding up
+    another 10×.
 
     Shuffle partitions are sized to the data (~2.5 M rows/partition,
     capped at 512): no cluster runs a 600 M-row wide aggregation on the
@@ -367,97 +272,53 @@ def crossover_spark_only(spark, n_rows: int) -> dict:
     spill-bound count_distinct to 114 s where 256 partitions run it in
     10.8 s. The conf is restored after the block.
 
-    Round 13 (VERDICT r12 tasks 1/3/4) adds:
+    Next to the four shared legs:
 
-    - ``distinct_approx``: the profiler's documented production path
-      (HyperLogLog++, fixed-KB state per column) next to the exact
-      count_distinct leg, with its measured relative error vs the
-      closed-form truth (k has exactly n_rows/2 distinct values, v 97).
     - ``dedup_repart``: repartition-by-key FIRST, then aggregate — the
       zero-layout mitigation for the plain leg's map-side partial-agg
       spill (each input partition holds ~all-distinct keys, so the
       partial pass builds a task-sized hash map, spills, and reduces
       nothing; shuffling rows unaggregated costs the same bytes and
       lets both agg passes run over ~n/partitions keys).
+    - ``distinct_approx``: the profiler's documented production path
+      (HyperLogLog++, fixed-KB state per column) next to the exact
+      count_distinct leg, with its measured relative error vs the
+      closed-form truth (k has exactly n_rows/2 distinct values, v 97).
     - ``dedup_bucketed``: keep-first dedup reading a pre-bucketed
       layout (``partitioning.write_bucketed``, 512 buckets) — the
       recurring-dedup answer: NO exchange in the agg plan (bucketed
       scan satisfies the clustering) and per-task hash maps bounded by
       the bucket's key count. The one-time layout write is reported
-      separately as ``bucket_layout_sec`` (0.0 = reused the on-disk
-      table from an earlier run, like the IVF/PQ index builds).
-    - a per-leg re-measure rule (XHUGE_LEG_REF): legs far above their
-      steady reference re-run once when a calibration probe confirms
-      the host was off steady state — the r12 artifact carried a 2.5×
-      contended swing on the plain dedup leg."""
-    import numpy as np  # noqa: F401
+      separately as ``bucket_layout_sec`` (null = reused the on-disk
+      table from an earlier run, like the IVF/PQ index builds)."""
     from pyspark.sql import functions as F
 
-    from dataforge_spark.operators.outliers import handle_outliers
-    from dataforge_spark.operators.normalization import normalize_data
     from dataforge_spark.partitioning import register_bucketed, write_bucketed
 
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     target = min(512, max(int(prev_parts), n_rows // 2_500_000))
     spark.conf.set("spark.sql.shuffle.partitions", target)
     secs: dict[str, float] = {}
-    contended: dict[str, dict] = {}
-
-    def leg(name, fn):
-        t0 = time.time()
-        fn()
-        best = round(time.time() - t0, 3)
-        ref = XHUGE_LEG_REF.get(name)
-        if ref and best > XHUGE_GUARD_FACTOR * ref:
-            probe = _calibration_sec(spark)
-            if probe > SPARK_CAL_STEADY:
-                t0 = time.time()
-                fn()
-                best = min(best, round(time.time() - t0, 3))
-            contended[name] = {"ref": ref, "best": best,
-                               "probe": round(probe, 3)}
-        secs[name] = best
-
+    approx_row: dict = {}
     try:
-        gen = spark.range(n_rows).select(
-            "id",
-            (F.sin(F.col("id").cast("double")) * 1000 + 5000).alias("price"),
-        )
-        leg("iqr_cap", lambda: _noop(
-            handle_outliers(gen, columns=["price"], method="iqr",
-                            action="cap")))
-        leg("standard_scale", lambda: _noop(
-            normalize_data(gen, columns=["price"], method="standard")[0]))
-        dup = spark.range(n_rows).select(
-            (F.col("id") % (n_rows // 2)).alias("k"),
-            (F.col("id") % 97).alias("v"),
-        )
-        leg("dedup", lambda: _noop(
-            dup.groupBy("k").agg(F.min("v").alias("v"))))
-        leg("dedup_repart", lambda: _noop(
+        legs, dup = _spark_legs(spark, n_rows)
+        legs["dedup_repart"] = lambda: _noop(
             dup.repartition(target, F.col("k"))
-            .groupBy("k").agg(F.min("v").alias("v"))))
-        leg("distinct_count", lambda: _noop(
-            dup.agg(F.count_distinct("k").alias("n"),
-                    F.count_distinct("v").alias("m"))))
-        # HLL++ leg + measured relative error vs the closed-form truth
-        approx_row: dict = {}
-
-        def _approx():
-            approx_row.update(
-                dup.agg(
-                    F.approx_count_distinct("k").alias("n"),
-                    F.approx_count_distinct("v").alias("m"),
-                ).collect()[0].asDict()
-            )
-
-        leg("distinct_approx", _approx)
+            .groupBy("k").agg(F.min("v").alias("v")))
+        legs["distinct_approx"] = lambda: approx_row.update(
+            dup.agg(
+                F.approx_count_distinct("k").alias("n"),
+                F.approx_count_distinct("v").alias("m"),
+            ).collect()[0].asDict()
+        )
+        for name, fn in legs.items():
+            secs[name] = _best_of(1, fn)
         # bucketed-layout leg: one-time write (disclosed), then the
         # exchange-free aggregation over the bucketed scan
         buckets = 512
         tbl = f"dedup_bucketed_{n_rows}"
         bpath = f"/tmp/dataforge_bucketed_{n_rows}_{buckets}"
-        layout_sec = 0.0
+        layout_sec = None
         if not os.path.exists(os.path.join(bpath, "_SUCCESS")):
             t0 = time.time()
             spark.sql(f"DROP TABLE IF EXISTS {tbl}")
@@ -466,7 +327,7 @@ def crossover_spark_only(spark, n_rows: int) -> dict:
             layout_sec = round(time.time() - t0, 3)
         register_bucketed(spark, tbl, bpath, "k", buckets,
                           "k BIGINT, v BIGINT")
-        leg("dedup_bucketed", lambda: _noop(
+        secs["dedup_bucketed"] = _best_of(1, lambda: _noop(
             spark.table(tbl).groupBy("k").agg(F.min("v").alias("v"))))
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
@@ -485,8 +346,6 @@ def crossover_spark_only(spark, n_rows: int) -> dict:
             "k": round(abs(int(approx_row["n"]) - exact_k) / exact_k, 4),
             "v": round(abs(int(approx_row["m"]) - exact_v) / exact_v, 4),
         }
-    if contended:
-        out["contended_legs"] = contended
     return out
 
 
@@ -535,7 +394,7 @@ def index_match_block(spark, n_rows: int, batch_rows: int = 10_000) -> dict:
 
     corpus = _gen_index_corpus(spark, n_rows)
     path = f"/tmp/dataforge_mh_idx_{n_rows}"
-    build_sec = 0.0
+    build_sec = None
     if not os.path.exists(os.path.join(path, "_meta", "_SUCCESS")):
         t0 = time.time()
         write_minhash_index(corpus, path)
@@ -565,7 +424,7 @@ def index_match_block(spark, n_rows: int, batch_rows: int = 10_000) -> dict:
     return {
         "rows": n_rows,
         "batch_rows": n_batch,
-        "build_sec": build_sec,  # 0.0 = reused the cached index
+        "build_sec": build_sec,  # null = reused the cached index
         "match_sec": match_sec,
         "rescan_sig_sec": rescan_sig_sec,
         "candidates": int(agg["cands"]),
@@ -605,18 +464,10 @@ def jsonl_bench(spark, sf_dir: str) -> dict:
                 fh.write('{"doc_id": %d, "text": broken\n' % i)
         open(os.path.join(src, "_BENCH_READY"), "w").close()
 
-    def best2(fn):
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.time()
-            fn()
-            best = min(best, time.time() - t0)
-        return round(best, 3)
-
     quarantined = read_jsonl(spark, src, schema=ddl, corrupt_col="_corrupt")
-    spark_read = best2(lambda: _noop(quarantined))
+    spark_read = _best_of(2, lambda: _noop(quarantined))
     out_path = f"/tmp/dataforge_jsonl_out_{os.getpid()}"
-    spark_write = best2(lambda: write_jsonl(docs, out_path, compression="gzip"))
+    spark_write = _best_of(2, lambda: write_jsonl(docs, out_path, compression="gzip"))
     # quarantine correctness spot check, off the clock (cache: Spark
     # disallows filtering the internal corrupt column on the raw scan)
     cached = quarantined.cache()
@@ -636,9 +487,9 @@ def jsonl_bench(spark, sf_dir: str) -> dict:
                         bad += 1
         pandas_read.result = (pd.DataFrame(rows), bad)
 
-    p_read = best2(pandas_read)
+    p_read = _best_of(2, pandas_read)
     pdf, p_bad = pandas_read.result
-    p_write = best2(lambda: pdf.to_json(
+    p_write = _best_of(2, lambda: pdf.to_json(
         f"/tmp/dataforge_jsonl_pd_{os.getpid()}.json.gz",
         orient="records", lines=True, compression="gzip",
     ))
@@ -755,18 +606,7 @@ def sf1_block(spark, sf1_dir: str, stream_overhead_sec: float | None = None) -> 
 
     import duckdb
 
-    qs = dict(entry.queries())
-    qs["s4_profile_approx"] = _s4_profile_approx
-    # bench-only row: folded into the sim_pq_topk registry union in r9,
-    # kept standalone here so the per-round bench history stays 1:1
-    qs["sim_cosine_topk"] = entry.q_sim_cosine_topk
-    # bench-only rows (r10): the sessionize legs timed separately; the
-    # registry union row stream_sessionize stays for the fold check
-    qs["stream_sessionize_native"] = entry.q_stream_sessionize_native
-    qs["stream_sessionize_stateful"] = entry.q_stream_sessionize_stateful
-    # r10: wagg/sjoin legs timed separately (union row stays for folds)
-    qs["stream_window_agg"] = entry.q_stream_wagg_only
-    qs["stream_sjoin"] = entry.q_stream_sjoin_only
+    qs = bench_queries()
     # prewarm the sf1 read paths + stream input copies
     entry._events(spark, sf1_dir).write.format("noop").mode("overwrite").save()
     entry.prewarm_stream_inputs(spark, sf1_dir)
@@ -781,75 +621,15 @@ def sf1_block(spark, sf1_dir: str, stream_overhead_sec: float | None = None) -> 
     entry.build_zorder_layout(spark, sf1_dir)
     entry._get_txt_classifier(spark, sf1_dir)
 
-    # best-of-2 like the sf0.1 block: single-shot sf1 numbers swing 5-8x
-    # with co-tenant load on this shared host (same query measured 12 s
-    # steady and 99 s in one unlucky window); the min of two runs is the
-    # honest steady-state proxy a long job would see.
-    # same host-speed reference job as the sf0.1 block, PAIRED around
-    # the Spark timing loop (contention starting mid-loop would
-    # otherwise hide behind a clean pre-loop sample while poisoning the
-    # very rows the headline ratio is computed from)
-    # Contention-aware retries (r8, VERDICT r7 task 1): a phase whose
-    # [pre, post] calibrations are far off steady state (Spark ~0.10-0.15,
-    # pandas numpy twin ~0.65 on this host) measured a co-tenant burst,
-    # not this tree — the r7 record shipped a 1.03x ratio whose pandas
-    # phase was contended while clean runs measured 0.6-0.76x. Each phase
-    # re-runs (once) while contended and the cleanest attempt is kept, so
-    # the committed record is calibration-clean whenever ANY attempt ran
-    # quiet; attempt counts are recorded for honesty.
-    spark_sec: dict[str, float] = {}
-    cal: list[float] = []
-    spark_attempts = 0
-    best_cal_max = float("inf")
-    sf1_contended: dict[str, dict] = {}
-    for _ in range(2):
-        spark_attempts += 1
-        cal_pre = _calibration_sec(spark)
-        attempt_sec: dict[str, float] = {}
-        for name in BENCH_QUERIES:
-
-            def _row_best3() -> float:
-                # best-of-3 at sf1 (r8): the edge calibrations can be
-                # steady while a co-tenant burst lands mid-loop on one
-                # query's both runs (observed: dedup_spans 3.45 in-loop
-                # vs 1.3 isolated, sim_cosine_topk 5.3 vs ~1.3); a third
-                # sample makes the recorded min a much better
-                # steady-state proxy for ~2.5 min of extra wall.
-                best = float("inf")
-                for _ in range(3):
-                    t0 = time.time()
-                    _noop(qs[name](spark, sf1_dir))
-                    best = min(best, time.time() - t0)
-                return best
-
-            best = _row_best3()
-            # Per-row contention guard at sf1 (VERDICT r12 task 3 —
-            # same protocol as the headline loop): a row far above its
-            # steady reference probes the host; off-steady probe =>
-            # weather, re-measure; steady probe => real, record it.
-            ref = SF1_STEADY_REF.get(name)
-            if ref and best > SF1_ROW_GUARD_FACTOR * ref:
-                attempts = [round(best, 3)]
-                probes = []
-                for _r in range(ROW_GUARD_RETRIES):
-                    probe = _calibration_sec(spark)
-                    probes.append(round(probe, 3))
-                    if probe <= SPARK_CAL_STEADY:
-                        break  # quiet host: trust the measurement
-                    best = min(best, _row_best3())
-                    attempts.append(round(best, 3))
-                    if best <= SF1_ROW_GUARD_FACTOR * ref:
-                        break
-                sf1_contended[name] = {
-                    "ref": ref, "attempts": attempts, "probes": probes,
-                }
-            attempt_sec[name] = round(best, 3)
-        attempt_cal = [cal_pre, _calibration_sec(spark)]
-        if max(attempt_cal) < best_cal_max:
-            best_cal_max = max(attempt_cal)
-            spark_sec, cal = attempt_sec, attempt_cal
-        if best_cal_max <= SPARK_CAL_STEADY:
-            break
+    # Best-of-3 per row (single-shot sf1 numbers swing 5-8x with
+    # co-tenant load on a shared host; a burst can land on both runs of
+    # one row), with the same edge calibrations and one re-run as the
+    # sf0.1 loop. The paired pandas phase below gets the same treatment
+    # from its own single-threaded calibration, so a co-tenant burst in
+    # either phase does not decide the ratio.
+    spark_runs = 3
+    spark_rows = time_rows(spark, qs, sf1_dir, runs=spark_runs)
+    spark_sec = spark_rows["sec"]
 
     pandas_sec: dict[str, float] = {}
     pandas_cal = None
@@ -936,16 +716,13 @@ def sf1_block(spark, sf1_dir: str, stream_overhead_sec: float | None = None) -> 
         # this block's best-of loop; `pandas_runs_per_query` is echoed
         # by the baseline subprocess so an asymmetry is visible in the
         # committed artifact instead of hiding behind one shared field
-        "spark_runs_per_query": 3,
+        "spark_runs_per_query": spark_runs,
         "pandas_runs_per_query": pandas_runs,
-        "spark_attempts": spark_attempts,
+        "spark_attempts": spark_rows["attempts"],
         "pandas_attempts": pandas_attempts,
-        # rows that tripped the sf1 per-row contention guard (VERDICT
-        # r12 task 3) — same record shape as the headline loop's
-        "contended_rows": sf1_contended,
         "ivf_index_build_sec": ivf_build,
         "pq_index_build_sec": pq_build,
-        "calibration_sec": cal,
+        "calibration_sec": spark_rows["calibration_sec"],
         # [pre, post] single-threaded numpy reference times from inside
         # the baseline subprocess — contention DURING the pandas phase
         # (measured 28 s for a 0.16 s-steady query in one window) shows
@@ -959,22 +736,8 @@ def sf1_block(spark, sf1_dir: str, stream_overhead_sec: float | None = None) -> 
         "pandas_sec": pandas_sec,
         "correctness": correctness,
     }
-    # streaming setup-vs-steady split at sf1 (VERDICT r8 task 6): the
-    # flat per-query micro-batch overhead is measured on a 10-row
-    # stream in main() and is scale-independent, so the sf1 steady
-    # (data-proportional) part is the recorded row minus that constant
     if stream_overhead_sec is not None:
         out["stream_overhead_sec"] = stream_overhead_sec
-        for row in ("stream_sessionize_stateful", "stream_window_agg",
-                    "stream_sjoin"):
-            if row in spark_sec:
-                # raw SIGNED value (VERDICT r9 nit 7): a negative number
-                # means the flat overhead estimate exceeded the measured
-                # row — overhead-dominated, NOT free; clamping to 0.0
-                # overstated the row
-                out[f"{row}_steady_sec"] = round(
-                    spark_sec[row] - stream_overhead_sec, 3
-                )
     return out
 
 
@@ -1013,14 +776,34 @@ def _calibration_sec(spark) -> float:
     block so the two stay comparable."""
     from pyspark.sql import functions as F
 
-    cal = float("inf")
-    for _ in range(3):
-        t0 = time.time()
-        spark.range(200_000_000).agg(
-            F.sum((F.col("id") % 97) * (F.col("id") % 89))
-        ).collect()
-        cal = min(cal, time.time() - t0)
-    return round(cal, 3)
+    return _best_of(3, lambda: spark.range(200_000_000).agg(
+        F.sum((F.col("id") % 97) * (F.col("id") % 89))
+    ).collect())
+
+
+def time_rows(spark, qs: dict, sf_dir: str, runs: int,
+              names: list[str] = BENCH_QUERIES) -> dict:
+    """Time every row in ``names`` as its best of ``runs`` noop-sink runs,
+    between two ``_calibration_sec`` probes. When either probe is above
+    SPARK_CAL_STEADY, the whole loop runs once more and the attempt with
+    the lower calibration maximum is kept: a row loop should measure the
+    tree, not a co-tenant burst. Returns ``{"sec": {row: seconds},
+    "wall_sec": ..., "calibration_sec": [pre, post], "attempts": n}``;
+    the sf0.1 headline and the sf1 block both time their rows here."""
+    kept: dict = {}
+    for attempt in (1, 2):
+        cal_pre = _calibration_sec(spark)
+        t_all = time.time()
+        sec = {name: _best_of(runs, lambda: _noop(qs[name](spark, sf_dir)))
+               for name in names}
+        wall = round(time.time() - t_all, 3)
+        cal = [cal_pre, _calibration_sec(spark)]
+        if not kept or max(cal) < max(kept["calibration_sec"]):
+            kept = {"sec": sec, "wall_sec": wall, "calibration_sec": cal}
+        kept["attempts"] = attempt
+        if max(kept["calibration_sec"]) <= SPARK_CAL_STEADY:
+            break
+    return kept
 
 
 def recall_block(spark, sf_dir: str) -> dict:
@@ -1143,7 +926,7 @@ def main() -> None:
     except ValueError:
         sf = -1.0
     spark = get_spark("dataforge_bench")
-    qs = entry.queries()
+    qs = bench_queries()
 
     # Warm-up: first job pays JVM/codegen/parquet-footer costs (~8 s);
     # keep it out of the per-query numbers. Touch both the lineitem and
@@ -1183,18 +966,6 @@ def main() -> None:
     # job pays it once per application.
     stream_setup_sec = round(time.time() - t0, 3)
 
-    qs = dict(qs)
-    qs["s4_profile_approx"] = _s4_profile_approx
-    # bench-only (see sf1_block): registry slot now hosts sim_pq_topk
-    qs["sim_cosine_topk"] = entry.q_sim_cosine_topk
-    # bench-only (r10): sessionize legs timed separately (see
-    # BENCH_QUERIES comment); registry union row stays for correctness
-    qs["stream_sessionize_native"] = entry.q_stream_sessionize_native
-    qs["stream_sessionize_stateful"] = entry.q_stream_sessionize_stateful
-    # r10: wagg/sjoin legs timed separately (union row stays for the gate)
-    qs["stream_window_agg"] = entry.q_stream_wagg_only
-    qs["stream_sjoin"] = entry.q_stream_sjoin_only
-
     # JIT pre-compilation: run every headline query once at sf0.001 (tiny
     # data, the SAME plan shapes) before the clock starts. The text rows
     # generate codegen methods large enough that the JVM's C2 compiler
@@ -1223,18 +994,12 @@ def main() -> None:
     # pre-compile loop (which already drained parquet-sink streams), so
     # one-time sink-class setup isn't misattributed to the per-query
     # constant; best-of-2 like every other number on this noisy host.
-    # steady(data-proportional) cost of a streaming row = row - this.
-    stream_overhead_sec = float("inf")
-    for _ in range(2):
-        t0 = time.time()
-        run_to_parquet_df(
-            sessionize_stream(
-                spark.readStream.schema(ev.schema).parquet(tiny),
-                user_col="user_id", ts_col="ts", gap_minutes=30,
-            )
-        ).count()
-        stream_overhead_sec = min(stream_overhead_sec, time.time() - t0)
-    stream_overhead_sec = round(stream_overhead_sec, 3)
+    stream_overhead_sec = _best_of(2, lambda: run_to_parquet_df(
+        sessionize_stream(
+            spark.readStream.schema(ev.schema).parquet(tiny),
+            user_col="user_id", ts_col="ts", gap_minutes=30,
+        )
+    ).count())
 
     # Build the on-disk IVF index up front and report its cost as a
     # separate number: an on-disk index is a once-per-corpus amortized
@@ -1259,69 +1024,8 @@ def main() -> None:
     entry._dsir_model(spark, sf_dir)
     dsir_fit_sec = round(time.time() - t0, 3)
 
-    # Contention-aware retry (r8, symmetric with sf1_block): if either
-    # edge calibration of the headline loop lands far off steady state
-    # (~0.10-0.15 s on this host), the whole loop re-runs once and the
-    # cleanest attempt is recorded — the headline `value` is what every
-    # round comparison reads, so it should measure the tree, not a
-    # co-tenant burst.
-    times: dict[str, float] = {}
-    calibration_sec = calibration_post = None
-    wall = 0.0
-    headline_attempts = 0
-    best_cal_max = float("inf")
-    contended_rows: dict[str, dict] = {}
-    for _ in range(2):
-        headline_attempts += 1
-        cal_pre = _calibration_sec(spark)
-        attempt_times: dict[str, float] = {}
-        t_all = time.time()
-        for name in BENCH_QUERIES:
-
-            def _row_best() -> float:
-                best = float("inf")
-                for _ in range(RUNS_PER_QUERY):
-                    t0 = time.time()
-                    df = qs[name](spark, sf_dir)
-                    _noop(df)
-                    best = min(best, time.time() - t0)
-                return best
-
-            best = _row_best()
-            # Per-row contention guard (VERDICT r11 task 1): the r11
-            # artifact burned a 35x co-tenant burst into sim_pq_topk
-            # because the loop-level retry only samples calibration at
-            # the edges. If THIS row is way above its steady reference,
-            # probe the host immediately: off-steady probe => the number
-            # is weather, re-measure (up to ROW_GUARD_RETRIES); steady
-            # probe => it's a real regression, record it and move on.
-            ref = STEADY_REF.get(name)
-            if ref and best > ROW_GUARD_FACTOR * ref:
-                attempts = [round(best, 3)]
-                probes = []
-                for _r in range(ROW_GUARD_RETRIES):
-                    probe = _calibration_sec(spark)
-                    probes.append(probe)
-                    if probe <= SPARK_CAL_STEADY:
-                        break  # quiet host: trust the measurement
-                    best = min(best, _row_best())
-                    attempts.append(round(best, 3))
-                    if best <= ROW_GUARD_FACTOR * ref:
-                        break
-                contended_rows[name] = {
-                    "ref": ref,
-                    "attempts": attempts,
-                    "probes": [round(p, 3) for p in probes],
-                }
-            attempt_times[name] = round(best, 3)
-        attempt_wall = round(time.time() - t_all, 3)
-        cal_post = _calibration_sec(spark)
-        if max(cal_pre, cal_post) < best_cal_max:
-            best_cal_max = max(cal_pre, cal_post)
-            times, wall = attempt_times, attempt_wall
-            calibration_sec, calibration_post = cal_pre, cal_post
-        if best_cal_max <= SPARK_CAL_STEADY:
-            break
+    headline = time_rows(spark, qs, sf_dir, runs=RUNS_PER_QUERY)
+    times = headline["sec"]
     total = round(sum(times.values()), 3)
 
     out = {
@@ -1330,52 +1034,31 @@ def main() -> None:
         "unit": "sec",
         "queries": times,
         "sf": sf,
-        # r14 (VERDICT r13 task 6): the core count the run actually
-        # used, so a low-core driver rerun is readable as such straight
-        # from the line (the sf0.1 rows are machinery-bound and ≈flat in
-        # cores; see scaling_600m for the core-sensitive signal)
+        # the core count the run actually used, so a low-core rerun is
+        # readable as such straight from the line (the sf0.1 rows are
+        # machinery-bound and ≈flat in cores; see scaling_600m for the
+        # core-sensitive signal)
         "cpus": _BENCH_CPUS,
         "runs_per_query": RUNS_PER_QUERY,
-        "wall_sec": wall,
-        "headline_attempts": headline_attempts,
-        # once-per-corpus on-disk IVF build (0.0 = reused an existing
-        # index for this testdata fingerprint); searches are timed in
-        # the sim_ivf_disk_topk row
+        "wall_sec": headline["wall_sec"],
+        "headline_attempts": headline["attempts"],
+        # once-per-corpus builds (null = reused the one on disk for this
+        # testdata fingerprint); the rows time the searches and reads
         "ivf_index_build_sec": ivf_build_sec,
         "pq_index_build_sec": pq_build_sec,
         "sq_index_build_sec": sq_build_sec,
         "zorder_write_sec": zorder_write_sec,
         "clf_train_sec": clf_train_sec,
         "dsir_fit_sec": dsir_fit_sec,
-        # rows that tripped the per-row contention guard: reference,
-        # best-so-far after each re-measure, calibration probes (see the
-        # guard comment in the loop) — empty means no row was suspect
-        "contended_rows": contended_rows,
         # fixed reference-job time [before, after] the timed loop (see
         # _calibration_sec): either element >> ~0.6 s ⇒ the rows above
         # carry co-tenant contention, not regression
-        "calibration_sec": [calibration_sec, calibration_post],
-        # streaming setup-vs-steady split (VERDICT r6 task 3): setup =
-        # once-per-session machinery; overhead = flat per-query
-        # micro-batch cost measured on a 10-row stream through the
-        # production parquet sink; steady = recorded stream_sessionize
-        # row minus that flat overhead (the data-proportional part).
+        "calibration_sec": headline["calibration_sec"],
+        # streaming costs: setup = once-per-session machinery; overhead =
+        # flat per-query micro-batch cost measured on a 10-row stream
+        # through the production parquet sink
         "stream_setup_sec": stream_setup_sec,
         "stream_overhead_sec": stream_overhead_sec,
-        # raw SIGNED steady values (VERDICT r9 nit 7): negative means
-        # the flat overhead estimate exceeded the measured row —
-        # overhead-dominated, not free (the old max(0, ·) clamp read
-        # as "free" and overstated the row). r10: the sessionize steady
-        # split applies to the STATEFUL leg (the only one that runs a
-        # streaming query; the native headline is a batch plan).
-        "stream_sessionize_stateful_steady_sec": round(
-            times.get("stream_sessionize_stateful", 0.0) - stream_overhead_sec, 3
-        ),
-        # same split for the other streaming rows (r8): their recorded
-        # numbers are likewise ~flat micro-batch machinery + steady work
-        "stream_window_agg_steady_sec": round(
-            times.get("stream_window_agg", 0.0) - stream_overhead_sec, 3
-        ),
     }
     # Measured recall of the approximate paths (off the timed clock).
     # The final line carries a compact summary only (it must stay well
@@ -1524,9 +1207,6 @@ def main() -> None:
             "ratio": (round(sp_total / pd_total, 3) if pd_total else None),
             "fold_checks_pass": sum(1 for v in folds.values() if v.get("match")),
             "fold_checks_total": len(folds),
-            # count of sf1 rows that tripped the per-row guard (full
-            # records in bench_detail.json sf1.contended_rows)
-            "crows": len(s1.get("contended_rows") or {}),
             "calibration_sec": s1.get("calibration_sec"),
             "pandas_calibration_sec": s1.get("pandas_calibration_sec"),
             "spark_attempts": s1.get("spark_attempts"),
@@ -1534,12 +1214,6 @@ def main() -> None:
             # per-side best-of sample counts (ADVICE r8)
             "runs": [s1.get("spark_runs_per_query"),
                      s1.get("pandas_runs_per_query")],
-            # short keys: the final line must stay under the driver's
-            # ~2 KB tail budget (full names in bench_detail.json sf1)
-            "wagg_steady_sec": s1.get("stream_window_agg_steady_sec"),
-            "sess_stateful_steady_sec": s1.get(
-                "stream_sessionize_stateful_steady_sec"
-            ),
         }
 
     detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
@@ -1569,15 +1243,12 @@ _LINE_DROP_ORDER: list[tuple[str, ...]] = [
     ("crossover",),
     ("index_match",),
     ("crossover_600m",),
-    ("contended_rows",),
     ("zorder_write_sec",),
     ("clf_train_sec",),
     ("dsir_fit_sec",),
     ("calibration_sec",),
     ("stream_setup_sec",),
     ("stream_overhead_sec",),
-    ("stream_sessionize_stateful_steady_sec",),
-    ("stream_window_agg_steady_sec",),
     ("ivf_index_build_sec",),
     ("pq_index_build_sec",),
     ("headline_attempts",),
@@ -1586,9 +1257,6 @@ _LINE_DROP_ORDER: list[tuple[str, ...]] = [
     ("sf1", "spark_attempts"),
     ("sf1", "pandas_attempts"),
     ("sf1", "runs"),
-    ("sf1", "crows"),
-    ("sf1", "wagg_steady_sec"),
-    ("sf1", "sess_stateful_steady_sec"),
     ("wall_sec",),
     ("runs_per_query",),
     ("crossover_60m",),

@@ -45,50 +45,6 @@ def read_events_stream(spark: SparkSession, path: str, schema) -> DataFrame:
     return spark.readStream.schema(schema).parquet(path)
 
 
-class _ephemeral_drain_confs:
-    """Scoped state-store confs for the BOUNDED drain helpers below
-    (availableNow trigger, fresh checkpoint deleted right after the
-    drain — run_to_memory / run_aggregate_to_memory / run_to_parquet_df
-    only; the durable caller-owned-checkpoint paths keep session
-    defaults).
-
-    For a checkpoint that is discarded seconds after the query stops,
-    state-store maintenance (snapshot compaction for faster RESTART
-    recovery) and deep commit-log retention (replay history a fresh
-    checkpoint will never read) are pure overhead. r14 interleaved A/B
-    on the stream_sjoin drain (min-of-4, identical checksums): defaults
-    2.201 s / maintenance-off 2.151 / retention-2 2.097 / both 2.078 —
-    a small, directionally consistent ~0.1 s of avoidable machinery per
-    drain. Confs are captured and restored so long-running production
-    streams started from the same session are untouched."""
-
-    _CONFS = {
-        "spark.sql.streaming.stateStore.maintenanceInterval": "3600s",
-        "spark.sql.streaming.minBatchesToRetain": "2",
-    }
-
-    def __init__(self, spark: SparkSession):
-        self._spark = spark
-        self._saved: dict[str, str | None] = {}
-
-    def __enter__(self):
-        for k, v in self._CONFS.items():
-            try:
-                self._saved[k] = self._spark.conf.get(k)
-            except Exception:
-                self._saved[k] = None
-            self._spark.conf.set(k, v)
-        return self
-
-    def __exit__(self, *exc):
-        for k, v in self._saved.items():
-            if v is None:
-                self._spark.conf.unset(k)
-            else:
-                self._spark.conf.set(k, v)
-        return False
-
-
 def suggest_state_partitions(
     spark: SparkSession,
     plan_bytes: int | None,
@@ -464,15 +420,14 @@ def run_to_memory(stream_df: DataFrame, name: str | None = None) -> DataFrame:
     return the materialized result as a batch DataFrame — the test/driver
     harness for the streaming operators above."""
     name = name or f"mem_{uuid.uuid4().hex[:8]}"
-    with _ephemeral_drain_confs(stream_df.sparkSession):
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    q = (
+        stream_df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
     return stream_df.sparkSession.table(name)
 
 
@@ -519,9 +474,8 @@ def run_to_parquet_df(stream_df: DataFrame, name: str | None = None) -> DataFram
     # registered BEFORE the drain so a failed/interrupted query's dirs
     # (out + the not-yet-removed checkpoint) are still reaped at exit
     _SINK_DIRS.append(base)
-    with _ephemeral_drain_confs(stream_df.sparkSession):
-        q = run_to_parquet(stream_df, f"{base}/out", f"{base}/ckpt")
-        q.awaitTermination()
+    q = run_to_parquet(stream_df, f"{base}/out", f"{base}/ckpt")
+    q.awaitTermination()
     shutil.rmtree(f"{base}/ckpt", ignore_errors=True)
     return stream_df.sparkSession.read.schema(stream_df.schema).parquet(
         f"{base}/out"
@@ -531,15 +485,14 @@ def run_to_parquet_df(stream_df: DataFrame, name: str | None = None) -> DataFram
 def run_aggregate_to_memory(stream_df: DataFrame, name: str | None = None) -> DataFrame:
     """Same as run_to_memory but for aggregate streams (complete mode)."""
     name = name or f"mem_{uuid.uuid4().hex[:8]}"
-    with _ephemeral_drain_confs(stream_df.sparkSession):
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    q = (
+        stream_df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("complete")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
     return stream_df.sparkSession.table(name)
 
 

@@ -12,8 +12,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import __spark_entry__ as entrymod  # noqa: E402
-from bench import BENCH_QUERIES  # noqa: E402
+from bench import BENCH_QUERIES, bench_queries  # noqa: E402
 from dataforge_spark.session import get_spark  # noqa: E402
 
 
@@ -29,11 +28,7 @@ def main() -> None:
     )
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("dump_plans")
-    qs = dict(entrymod.queries())
-    from bench import _s4_profile_approx
-
-    qs["s4_profile_approx"] = _s4_profile_approx
-    qs["sim_cosine_topk"] = entrymod.q_sim_cosine_topk
+    qs = bench_queries()
     for name in names:
         try:
             df = qs[name](spark, sf_dir)

@@ -12,8 +12,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import __spark_entry__ as entrymod  # noqa: E402
-from bench import BENCH_QUERIES  # noqa: E402
+from bench import BENCH_QUERIES, bench_queries  # noqa: E402
 from dataforge_spark.session import get_spark  # noqa: E402
 
 
@@ -23,12 +22,7 @@ def main() -> None:
         q for q in BENCH_QUERIES if not q.startswith("stream_")
     ]
     spark = get_spark("explain_audit")
-    qs = dict(entrymod.queries())
-    from bench import _s4_profile_approx
-
-    qs["s4_profile_approx"] = _s4_profile_approx
-    # bench-only row since r9 (registry slot folded into sim_pq_topk)
-    qs["sim_cosine_topk"] = entrymod.q_sim_cosine_topk
+    qs = bench_queries()
     print(f"{'query':28s} {'exch':>4s} {'bcast':>5s} {'smj':>4s} {'pyudf':>5s}  scans (ReadSchema, truncated)")
     for name in names:
         df = qs[name](spark, sf_dir)
