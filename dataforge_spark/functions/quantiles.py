@@ -50,6 +50,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..io import qcol
+
 
 def sketch_quantiles(
     sel: DataFrame,
@@ -131,8 +133,8 @@ def exact_quantiles(
     # NaN → NULL so ordering/count semantics are pandas-like everywhere.
     sel = df.select(
         *[
-            F.when(F.isnan(F.col(c).cast("double")), None)
-            .otherwise(F.col(c).cast("double"))
+            F.when(F.isnan(qcol(c).cast("double")), None)
+            .otherwise(qcol(c).cast("double"))
             .alias(c)
             for c in columns
         ]
@@ -192,7 +194,7 @@ def exact_quantiles(
 
     # Count pass: per (col, prob) below/within + per-col non-null n.
     aggs = [F.count(F.lit(1)).alias("rows__")]
-    aggs += [F.count(F.col(c)).alias(f"n__{c}") for c in columns]
+    aggs += [F.count(qcol(c)).alias(f"n__{c}") for c in columns]
     brackets: dict[tuple[str, int], tuple[float, float]] = {}
     for c in columns:
         if not sketch[c]:
@@ -202,8 +204,8 @@ def exact_quantiles(
             hi = sketch[c][min(1.0, q + pad)]
             brackets[(c, j)] = (lo, hi)
             aggs += [
-                F.sum((F.col(c) < lo).cast("long")).alias(f"b__{c}__{j}"),
-                F.sum(F.col(c).between(lo, hi).cast("long")).alias(f"w__{c}__{j}"),
+                F.sum((qcol(c) < lo).cast("long")).alias(f"b__{c}__{j}"),
+                F.sum(qcol(c).between(lo, hi).cast("long")).alias(f"w__{c}__{j}"),
             ]
     row = sel.agg(*aggs).collect()[0].asDict()
     if null_counts is not None:
@@ -241,7 +243,7 @@ def exact_quantiles(
                 F.sort_array(
                     F.collect_list(
                         F.when(
-                            F.col(c).between(*brackets[(c, j)]), F.col(c)
+                            qcol(c).between(*brackets[(c, j)]), qcol(c)
                         )
                     )
                 ).alias(f"v__{c}__{j}")
@@ -265,7 +267,7 @@ def exact_quantiles(
             below = int(row[f"b__{c}__{j}"] or 0)
             lo, hi = brackets[(c, j)]
             out[c][j] = _refine(
-                sel.where(F.col(c).between(lo, hi)).select(c),
+                sel.where(qcol(c).between(lo, hi)).select(qcol(c)),
                 c, n, probs[j], below,
                 relative_error, max_collect, max_depth - 1,
             )
@@ -276,7 +278,7 @@ def exact_quantiles(
             # column: _refine re-sketches its own window around the exact
             # ranks it needs, independent of the failed bracket.
             out[c][j] = _refine(
-                sel.select(c).where(F.col(c).isNotNull()),
+                sel.select(qcol(c)).where(qcol(c).isNotNull()),
                 c, n, probs[j], 0,
                 relative_error, max_collect, max_depth,
             )
@@ -304,7 +306,7 @@ def _refine(
         cnt = sub.count()
         if cnt <= max_collect:
             vals = sub.agg(
-                F.sort_array(F.collect_list(F.col(c))).alias("v")
+                F.sort_array(F.collect_list(qcol(c))).alias("v")
             ).collect()[0]["v"]
             return _interpolate(vals, n, q, below)
         # local padded prob window around the needed ranks
@@ -318,9 +320,9 @@ def _refine(
             return None
         lo, hi = sk[p_lo], sk[p_hi]
         nb = sub.agg(
-            F.sum((F.col(c) < lo).cast("long")).alias("b")
+            F.sum((qcol(c) < lo).cast("long")).alias("b")
         ).collect()[0]["b"] or 0
-        sub = sub.where(F.col(c).between(lo, hi))
+        sub = sub.where(qcol(c).between(lo, hi))
         below += int(nb)
         depth -= 1
     # Out of refinement depth: the bracket is dominated by duplicates, so

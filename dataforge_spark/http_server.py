@@ -2,12 +2,11 @@
 
 The reference serves its REST surface with FastAPI (main.py:79-331) and a
 static frontend (frontend/index.html, started by frontend/start_frontend.py).
-This container does not ship FastAPI, so ``create_app`` (service.py:248)
-is import-gated; this module makes the same surface actually runnable
-anywhere Python is, with zero dependencies: a ``ThreadingHTTPServer``
-routing straight into the framework-free ``DataForgeService`` handlers.
+This module serves the same surface with the standard library alone: a
+``ThreadingHTTPServer`` routing straight into the framework-free
+``DataForgeService`` handlers.
 
-Routes (same contract as service.create_app / reference main.py):
+Routes (same contract as reference main.py):
 
     GET    /                    -> service.root()
     GET    /health              -> service.health()

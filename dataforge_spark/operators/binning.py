@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..io import ROW_ID
+from ..io import ROW_ID, qcol
 from .missing_values import _data_cols, _numeric_cols
 
 
@@ -64,8 +64,8 @@ def bin_columns(
             )
     else:
         row = df.agg(
-            *[F.min(F.col(c).cast("double")).alias(f"mn_{c}") for c in cols],
-            *[F.max(F.col(c).cast("double")).alias(f"mx_{c}") for c in cols],
+            *[F.min(qcol(c).cast("double")).alias(f"mn_{c}") for c in cols],
+            *[F.max(qcol(c).cast("double")).alias(f"mx_{c}") for c in cols],
         ).collect()[0]
         for c in cols:
             mn, mx = row[f"mn_{c}"], row[f"mx_{c}"]
@@ -92,7 +92,7 @@ def apply_bins(
     for c, es in edges.items():
         if c == ROW_ID or c not in out.columns:
             continue
-        v = F.col(c).cast("double")
+        v = qcol(c).cast("double")
         ordinal = F.lit(0)
         for e in es:
             ordinal = ordinal + (v > F.lit(float(e))).cast("int")

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..io import ROW_ID
+from ..io import ROW_ID, qcol
 from .type_conversion import (
     DATETIME_FORMATS,
     _elect_datetime_formats,
@@ -105,7 +105,7 @@ def parse_datetime_columns(
         # all rows, not non-null rows). One aggregate job for all columns.
         aggs = [F.count(F.lit(1)).alias("__n")] + [
             F.count(
-                parse_timestamp_expr(F.col(c), col_fmts[c])
+                parse_timestamp_expr(qcol(c), col_fmts[c])
                 if col_fmts[c] else F.lit(None)
             ).alias(c)
             for c in str_candidates
@@ -120,8 +120,8 @@ def parse_datetime_columns(
         bad = df.agg(
             *[
                 F.sum(
-                    (F.col(c).isNotNull()
-                     & parse_timestamp_expr(F.col(c), col_fmts[c]).isNull())
+                    (qcol(c).isNotNull()
+                     & parse_timestamp_expr(qcol(c), col_fmts[c]).isNull())
                     .cast("long")
                 ).alias(c)
                 for c in adopt
@@ -135,9 +135,9 @@ def parse_datetime_columns(
 
     out = df
     for c in adopt:
-        out = out.withColumn(c, parse_timestamp_expr(F.col(c), col_fmts[c]))
+        out = out.withColumn(c, parse_timestamp_expr(qcol(c), col_fmts[c]))
     if extract_features:
         for c in adopt + ts_cols:
             for feat, fn in FEATURES.items():
-                out = out.withColumn(f"{c}_{feat}", fn(F.col(c)))
+                out = out.withColumn(f"{c}_{feat}", fn(qcol(c)))
     return out

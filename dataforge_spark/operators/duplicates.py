@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..io import ROW_ID
+from ..io import ROW_ID, qcol
 
 
 def duplicate_count(df: DataFrame, subset: list[str] | None = None) -> int:
@@ -60,17 +60,19 @@ def drop_duplicates(
         # max() skips NULLs exactly like the desc sort does.
         if keep == "first":
             agg = F.when(
-                F.count(F.lit(1)) > F.count(order_col), F.lit(None)
-            ).otherwise(F.min(order_col))
+                F.count(F.lit(1)) > F.count(qcol(order_col)), F.lit(None)
+            ).otherwise(F.min(qcol(order_col)))
         else:
-            agg = F.max(order_col)
+            agg = F.max(qcol(order_col))
         return (
-            df.groupBy(*[F.col(c) for c in cols])
+            df.groupBy(*[qcol(c) for c in cols])
             .agg(agg.alias(order_col))
-            .select(*df.columns)
+            .select(*[qcol(c) for c in df.columns])
         )
-    order = F.asc(order_col) if keep == "first" else F.desc(order_col)
-    w = Window.partitionBy(*cols).orderBy(order)
+    o = qcol(order_col)
+    w = Window.partitionBy(*[qcol(c) for c in cols]).orderBy(
+        o.asc() if keep == "first" else o.desc()
+    )
     return (
         df.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)

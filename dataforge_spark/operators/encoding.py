@@ -188,7 +188,7 @@ def encode_onehot(
             F.when(qcol(c).cast("string") == v, 1).otherwise(0).alias(f"{c}_{v}")
             for v in keep
         ] + [qcol(c).isNull().cast("int").alias(f"{c}_nan")]
-        out = out.select(*[F.col(x) for x in out.columns if x != c], *dummies)
+        out = out.select(*[qcol(x) for x in out.columns if x != c], *dummies)
     return out
 
 

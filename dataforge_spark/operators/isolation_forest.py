@@ -24,6 +24,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..io import qcol
+
 try:  # pragma: no cover - environment probe
     from sklearn.ensemble import IsolationForest  # type: ignore
 
@@ -81,7 +83,7 @@ def isolation_forest_mask(
 
     masks: Column | None = None
     for c in cols:
-        col_df = df.select(c).where(F.col(c).isNotNull())
+        col_df = df.select(qcol(c)).where(qcol(c).isNotNull())
         if n > max_fit_rows:
             col_pdf = col_df.sample(fraction=max_fit_rows / n, seed=random_state).toPandas()
         else:
@@ -92,6 +94,6 @@ def isolation_forest_mask(
         # the flagged set) a pure function of the VALUE MULTISET.
         col_pdf = col_pdf.sort_values(c).reset_index(drop=True)
         model = fit_model(col_pdf[[c]].values)
-        p = make_scorer(model)(F.col(c).cast("double"))
+        p = make_scorer(model)(qcol(c).cast("double"))
         masks = p if masks is None else (masks | p)
     return masks if masks is not None else F.lit(False)

@@ -116,11 +116,11 @@ def _order_key(df: DataFrame, order_col: str):
     boundaries in the column's own comparison domain."""
     dt = df.schema[order_col].dataType
     if isinstance(dt, NUMERIC_TYPES):
-        return F.col(order_col).cast("double")
+        return qcol(order_col).cast("double")
     if isinstance(dt, T.TimestampType):
-        return F.unix_micros(F.col(order_col)).cast("double")
+        return F.unix_micros(qcol(order_col)).cast("double")
     if isinstance(dt, (T.DateType,)):
-        return F.unix_date(F.col(order_col)).cast("double")
+        return F.unix_date(qcol(order_col)).cast("double")
     return None
 
 
@@ -183,7 +183,7 @@ def _ordered_fill(df: DataFrame, cols: list[str], direction: str, order_col: str
     key = _order_key(df, order_col)
     if fast:
         splits: list = []
-        key_col = F.col(order_col)
+        key_col = qcol(order_col)
     elif key is not None:
         probs = [i / n_buckets for i in range(1, n_buckets)]
         dfk = df.withColumn("_ord_key", key)
@@ -206,7 +206,7 @@ def _ordered_fill(df: DataFrame, cols: list[str], direction: str, order_col: str
         # boundary literals from a deterministic seeded sample — same
         # literal-application guarantee, comparison in the column's own
         # domain.
-        non_null = df.select(order_col).where(F.col(order_col).isNotNull())
+        non_null = df.select(qcol(order_col)).where(qcol(order_col).isNotNull())
         n = non_null.count()
         frac = min(1.0, 50_000 / n) if n else 1.0
         sampled = sorted(
@@ -214,16 +214,16 @@ def _ordered_fill(df: DataFrame, cols: list[str], direction: str, order_col: str
         )
         step = max(1, len(sampled) // n_buckets)
         splits = sorted(set(sampled[step::step]))
-        key_col = F.col(order_col)
+        key_col = qcol(order_col)
     bucket = F.lit(0)
     for b in splits:
         bucket = bucket + (key_col > F.lit(b)).cast("int")
-    bucket = F.when(F.col(order_col).isNull(), F.lit(-1)).otherwise(bucket)
+    bucket = F.when(qcol(order_col).isNull(), F.lit(-1)).otherwise(bucket)
     dfp = df.withColumn("_bucket", bucket)
 
     if direction == "ffill":
         local_w = (
-            Window.partitionBy("_bucket").orderBy(F.asc(order_col))
+            Window.partitionBy("_bucket").orderBy(qcol(order_col).asc())
             .rowsBetween(Window.unboundedPreceding, 0)
         )
         pick = lambda c: F.last(qcol(c), ignorenulls=True).over(local_w)  # noqa: E731
@@ -240,7 +240,7 @@ def _ordered_fill(df: DataFrame, cols: list[str], direction: str, order_col: str
         # picks an arbitrary tie member — order among ties is not part of
         # the contract.)
         local_w = (
-            Window.partitionBy("_bucket").orderBy(F.desc(order_col))
+            Window.partitionBy("_bucket").orderBy(qcol(order_col).desc())
             .rowsBetween(Window.unboundedPreceding, 0)
         )
         pick = lambda c: F.last(qcol(c), ignorenulls=True).over(local_w)  # noqa: E731
@@ -254,7 +254,7 @@ def _ordered_fill(df: DataFrame, cols: list[str], direction: str, order_col: str
         # boundaries to fix, so no edge/carry jobs at all.
         for c in cols:
             filled = filled.withColumn(
-                c, F.when(F.col("_bucket") == -1, qcol(c)).otherwise(F.col(f"_f_{c}"))
+                c, F.when(F.col("_bucket") == -1, qcol(c)).otherwise(qcol(f"_f_{c}"))
             )
         return filled.drop("_bucket", *[f"_f_{c}" for c in cols])
     # Per-bucket edge values (last non-null for ffill / first for bfill);
@@ -290,7 +290,7 @@ def _ordered_fill(df: DataFrame, cols: list[str], direction: str, order_col: str
         out = out.withColumn(
             c,
             F.when(F.col("_bucket") == -1, qcol(c)).otherwise(
-                F.coalesce(F.col(f"_f_{c}"), F.col(f"_c_{c}"))
+                F.coalesce(qcol(f"_f_{c}"), qcol(f"_c_{c}"))
             ),
         )
     return out.drop("_bucket", *[f"_f_{c}" for c in cols], *[f"_c_{c}" for c in cols])

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.quantiles import exact_quantiles
+from ..io import qcol
 from .missing_values import _data_cols, _numeric_cols
 
 METHODS = ["standard", "minmax", "robust", "normalize"]
@@ -44,7 +45,7 @@ def normalize_data(
     if method == "standard":
         aggs = []
         for c in cols:
-            aggs += [F.avg(c).alias(f"m_{c}"), F.stddev_pop(c).alias(f"s_{c}")]
+            aggs += [F.avg(qcol(c)).alias(f"m_{c}"), F.stddev_pop(qcol(c)).alias(f"s_{c}")]
         row = df.agg(*aggs).collect()[0]
         out = df
         for c in cols:
@@ -52,14 +53,14 @@ def normalize_data(
             s = row[f"s_{c}"] if with_std else 1.0
             s = s if s else 1.0  # sklearn: zero-variance → divide by 1
             params[c] = {"mean": m, "scale": s}
-            out = out.withColumn(c, (F.col(c) - F.lit(m)) / F.lit(s))
+            out = out.withColumn(c, (qcol(c) - F.lit(m)) / F.lit(s))
         return out, params
 
     if method == "minmax":
         a, b = feature_range
         aggs = []
         for c in cols:
-            aggs += [F.min(c).alias(f"lo_{c}"), F.max(c).alias(f"hi_{c}")]
+            aggs += [F.min(qcol(c)).alias(f"lo_{c}"), F.max(qcol(c)).alias(f"hi_{c}")]
         row = df.agg(*aggs).collect()[0]
         out = df
         for c in cols:
@@ -67,7 +68,7 @@ def normalize_data(
             span = (hi - lo) if hi is not None and lo is not None and hi != lo else 1.0
             params[c] = {"min": lo, "span": span, "a": a, "b": b}
             out = out.withColumn(
-                c, (F.col(c) - F.lit(lo)) / F.lit(span) * F.lit(b - a) + F.lit(a)
+                c, (qcol(c) - F.lit(lo)) / F.lit(span) * F.lit(b - a) + F.lit(a)
             )
         return out, params
 
@@ -83,17 +84,17 @@ def normalize_data(
             q1, med, q3 = (float(x) for x in qs[c])
             iqr = (q3 - q1) or 1.0
             params[c] = {"center": med, "scale": iqr}
-            out = out.withColumn(c, (F.col(c) - F.lit(med)) / F.lit(iqr))
+            out = out.withColumn(c, (qcol(c) - F.lit(med)) / F.lit(iqr))
         return out, params
 
     # normalize: row-wise L2 across the selected columns (N4). One SELECT so
     # every column divides by the norm of the ORIGINAL row values.
-    norm = F.sqrt(sum((F.coalesce(F.col(c), F.lit(0.0)) ** 2 for c in cols), F.lit(0.0)))
+    norm = F.sqrt(sum((F.coalesce(qcol(c), F.lit(0.0)) ** 2 for c in cols), F.lit(0.0)))
     out = df.select(
         *[
-            F.when(norm > 0, F.col(c) / norm).otherwise(F.col(c)).alias(c)
+            F.when(norm > 0, qcol(c) / norm).otherwise(qcol(c)).alias(c)
             if c in cols
-            else F.col(c)
+            else qcol(c)
             for c in df.columns
         ]
     )
@@ -108,15 +109,15 @@ def inverse_transform(df: DataFrame, params: dict) -> DataFrame:
         if c == "__method" or c not in df.columns:
             continue
         if method == "standard":
-            out = out.withColumn(c, F.col(c) * F.lit(p["scale"]) + F.lit(p["mean"]))
+            out = out.withColumn(c, qcol(c) * F.lit(p["scale"]) + F.lit(p["mean"]))
         elif method == "minmax":
             out = out.withColumn(
                 c,
-                (F.col(c) - F.lit(p["a"])) / F.lit(p["b"] - p["a"]) * F.lit(p["span"])
+                (qcol(c) - F.lit(p["a"])) / F.lit(p["b"] - p["a"]) * F.lit(p["span"])
                 + F.lit(p["min"]),
             )
         elif method == "robust":
-            out = out.withColumn(c, F.col(c) * F.lit(p["scale"]) + F.lit(p["center"]))
+            out = out.withColumn(c, qcol(c) * F.lit(p["scale"]) + F.lit(p["center"]))
         else:
             raise ValueError(f"cannot invert method {method!r}")
     return out
@@ -147,9 +148,9 @@ def scaling_statistics(df: DataFrame, columns: list[str] | None = None) -> dict:
     aggs = []
     for c in cols:
         aggs += [
-            F.avg(c).alias(f"mean_{c}"), F.stddev_samp(c).alias(f"std_{c}"),
-            F.min(c).alias(f"min_{c}"), F.max(c).alias(f"max_{c}"),
-            F.skewness(c).alias(f"skew_{c}"), F.kurtosis(c).alias(f"kurt_{c}"),
+            F.avg(qcol(c)).alias(f"mean_{c}"), F.stddev_samp(qcol(c)).alias(f"std_{c}"),
+            F.min(qcol(c)).alias(f"min_{c}"), F.max(qcol(c)).alias(f"max_{c}"),
+            F.skewness(qcol(c)).alias(f"skew_{c}"), F.kurtosis(qcol(c)).alias(f"kurt_{c}"),
         ]
     if not aggs:
         return {}

@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.quantiles import exact_quantiles
+from ..io import qcol
 from .missing_values import _data_cols, _numeric_cols
 
 METHODS = ["iqr", "zscore", "modified_zscore", "isolation_forest"]
@@ -54,7 +55,7 @@ def outlier_bounds(
     if method == "zscore":
         aggs = []
         for c in cols:
-            aggs += [F.avg(c).alias(f"m_{c}"), F.stddev_samp(c).alias(f"s_{c}")]
+            aggs += [F.avg(qcol(c)).alias(f"m_{c}"), F.stddev_samp(qcol(c)).alias(f"s_{c}")]
         row = df.agg(*aggs).collect()[0]
         out = {}
         for c in cols:
@@ -71,7 +72,7 @@ def outlier_bounds(
                 for c, v in exact_quantiles(
                     df.select(
                         *[
-                            F.abs(F.col(c) - F.lit(med_row[c])).alias(c)
+                            F.abs(qcol(c) - F.lit(med_row[c])).alias(c)
                             for c in mad_cols
                         ]
                     ),
@@ -119,8 +120,8 @@ def detect_outliers(
             continue
         pairs.append(
             F.when(
-                (F.col(c) < b[0]) | (F.col(c) > b[1]),
-                F.struct(F.lit(c).alias("col_name"), F.col(c).cast("double").alias("value")),
+                (qcol(c) < b[0]) | (qcol(c) > b[1]),
+                F.struct(F.lit(c).alias("col_name"), qcol(c).cast("double").alias("value")),
             )
         )
     if not pairs:
@@ -152,19 +153,19 @@ def handle_outliers(
         out = df
         for c in cols:
             out = out.withColumn(
-                c, F.when(F.col(c) > 0, F.log1p(F.col(c))).otherwise(F.col(c))
+                c, F.when(qcol(c) > 0, F.log1p(qcol(c))).otherwise(qcol(c))
             )
         return out
 
     if method == "isolation_forest":
+        # Reference silently no-ops for isolation_forest + cap (cap bounds
+        # only exist for the closed-form methods, methods/outliers.py:133-146),
+        # so no forest is fitted for it.
+        if action == "cap":
+            return df
         from .isolation_forest import isolation_forest_mask
 
-        mask = isolation_forest_mask(df, cols)  # Column: True where outlier
-        if action == "remove":
-            return df.where(~mask)
-        # Reference silently no-ops for isolation_forest + cap (cap bounds
-        # only exist for the closed-form methods, methods/outliers.py:133-146).
-        return df
+        return df.where(~isolation_forest_mask(df, cols))  # mask: True where outlier
 
     bounds = outlier_bounds(df, cols, method, threshold)
 
@@ -174,7 +175,7 @@ def handle_outliers(
             b = bounds[c]
             if b is None:
                 continue
-            p = (F.col(c) < b[0]) | (F.col(c) > b[1])
+            p = (qcol(c) < b[0]) | (qcol(c) > b[1])
             pred = p if pred is None else (pred | p)
         return df if pred is None else df.where(~F.coalesce(pred, F.lit(False)))
 
@@ -187,8 +188,8 @@ def handle_outliers(
         lo, hi = b
         out = out.withColumn(
             c,
-            F.when(F.col(c) < lo, F.lit(lo))
-            .when(F.col(c) > hi, F.lit(hi))
-            .otherwise(F.col(c)),
+            F.when(qcol(c) < lo, F.lit(lo))
+            .when(qcol(c) > hi, F.lit(hi))
+            .otherwise(qcol(c)),
         )
     return out

@@ -27,7 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..io import ROW_ID
+from ..io import ROW_ID, qcol
 
 # Builtin dictionary — the reference's exact 26 entries
 # (/root/reference/methods/spellingFix.py:22-50); behavioral constants must
@@ -44,6 +44,9 @@ COMMON_TYPOS = {
     "unitd": "united", "managment": "management", "deparment": "department",
     "devlopment": "development", "busness": "business", "finace": "finance",
 }
+
+
+METHODS = ["common_typos", "fuzzy_match", "spell_check"]
 
 
 def _text_cols(df: DataFrame, columns: list[str] | None) -> list[str]:
@@ -204,7 +207,7 @@ def _lsh_fuzzy_map(
                         F.lit(b).alias("band"),
                         F.xxhash64(
                             *[
-                                F.col(f"h{b * rows_per_band + r}")
+                                qcol(f"h{b * rows_per_band + r}")
                                 for r in range(rows_per_band)
                             ]
                         ).alias("bucket"),
@@ -267,16 +270,17 @@ def _apply_value_map(out: DataFrame, c: str, mapping: dict[str, str]) -> DataFra
         map_expr = F.create_map(
             *[x for kv in mapping.items() for x in (F.lit(kv[0]), F.lit(kv[1]))]
         )
-        return out.withColumn(c, F.coalesce(map_expr[F.col(c)], F.col(c)))
+        return out.withColumn(c, F.coalesce(map_expr[qcol(c)], qcol(c)))
     key, val = f"__typo_key_{c}", f"__typo_val_{c}"
     m_df = F.broadcast(
         out.sparkSession.createDataFrame(
-            list(mapping.items()), f"{key} string, {val} string"
+            list(mapping.items()),
+            T.StructType([T.StructField(key, T.StringType()), T.StructField(val, T.StringType())]),
         )
     )
     return (
-        out.join(m_df, on=F.col(c) == F.col(key), how="left")
-        .withColumn(c, F.coalesce(F.col(val), F.col(c)))
+        out.join(m_df, on=qcol(c) == qcol(key), how="left")
+        .withColumn(c, F.coalesce(qcol(val), qcol(c)))
         .drop(key, val)
     )
 
@@ -302,12 +306,12 @@ def fix_typos(
     if method == "common_typos":
         mapping = {**COMMON_TYPOS, **(custom_dict or {})}
         for c in cols:
-            out = out.withColumn(c, replace_words_expr(F.col(c), mapping))
+            out = out.withColumn(c, replace_words_expr(qcol(c), mapping))
         return out
 
     if method == "fuzzy_match":
         for c in cols:
-            domain = df.groupBy(F.col(c).alias("v")).agg(
+            domain = df.groupBy(qcol(c).alias("v")).agg(
                 F.count(F.lit(1)).alias("n")
             ).where(F.col("v").isNotNull())
             # Cardinality gate BEFORE collecting: the O(u²) driver-side
@@ -343,7 +347,7 @@ def fix_typos(
     if method == "spell_check":
         for c in cols:
             words = (
-                df.select(F.explode(F.split(F.lower(F.col(c)), r"\W+")).alias("w"))
+                df.select(F.explode(F.split(F.lower(qcol(c)), r"\W+")).alias("w"))
                 .where(F.length("w") > 0)
                 .groupBy("w")
                 .agg(F.count(F.lit(1)).alias("n"))
@@ -377,7 +381,7 @@ def fix_typos(
                 if best and abs(len(best[0]) - len(w)) <= 2:
                     corrections[w] = best[0]
             if corrections:
-                out = out.withColumn(c, replace_words_expr(F.col(c), corrections))
+                out = out.withColumn(c, replace_words_expr(qcol(c), corrections))
         return out
 
     raise ValueError(f"unknown typo method {method!r}")
@@ -396,7 +400,7 @@ def typo_statistics(df: DataFrame, columns: list[str] | None = None) -> DataFram
         )
     aggs = []
     for c in cols:
-        v = F.col(c)
+        v = qcol(c)
         ln = F.length(v.cast("string"))
         aggs += [
             F.count_distinct(v).alias(f"u_{c}"),

@@ -29,7 +29,8 @@ import logging
 import os
 import time
 import uuid
-from typing import Any
+from dataclasses import dataclass, field
+from typing import Any, Callable
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation
@@ -50,21 +51,140 @@ from .io import ROW_ID, qcol
 from .operators.missing_values import _data_cols, _numeric_cols
 from .sanitize import sanitize_for_json
 
-# Fixed canonical order (/root/reference/pipeline.py:142-152).
-CANONICAL_ORDER = [
-    "data_type_conversion",
-    "text_cleaning",
-    "datetime_parsing",
-    "missing_values",
-    "duplicates",
-    "outliers",
-    "typo_fix",
-    "encoding",
-    "normalization",
-]
 
-VALID_MISSING_STRATEGIES = missing_values.STRATEGIES
-VALID_OUTLIER_METHODS = outliers.METHODS
+@dataclass(frozen=True)
+class Op:
+    """One cleaning op, declared once: ``OPS`` drives dispatch
+    (``CleaningPipeline._apply_one``), the config check
+    (``validate_operations``), the persist policy and the /pipeline-info
+    manifest (``service.pipeline_info``).
+
+    ``params``: name -> (default, manifest type); the type's first word is
+    checked before the op runs. ``apply(df, **params)`` builds the op's
+    output. ``choices``: manifest key -> (param, allowed values).
+    ``runs_stats(params)``: whether building the op's plan runs Spark jobs
+    over its input (statistics, samples, failure counts)."""
+
+    description: str
+    params: dict[str, tuple[Any, str]]
+    apply: Callable[..., DataFrame]
+    choices: dict[str, tuple[str, list[str]]] = field(default_factory=dict)
+    runs_stats: Callable[[dict[str, Any]], bool] = lambda p: True
+
+
+def _late(module, fn: str) -> Callable[..., DataFrame]:
+    """``module.fn``, looked up at call time, so that a wrapper installed
+    on the module attribute later (a tracer) sees the call."""
+    return lambda df, **p: getattr(module, fn)(df, **p)
+
+
+# "target" is frequency encoding: the reference has no target column (E3)
+_ENCODERS = {
+    "label": lambda df, columns, drop_first: encoding.encode_label(df, columns)[0],
+    "onehot": lambda df, columns, drop_first: encoding.encode_onehot(
+        df, columns, drop_first=drop_first),
+    "target": lambda df, columns, drop_first: encoding.encode_frequency(df, columns),
+}
+_OPT_LIST, _OPT_BOOL, _OPT_STR = "list (optional)", "boolean (optional)", "string (optional)"
+_RAISE_OR_IGNORE = ("raise", "ignore")  # errors modes that count failing values in a job
+
+# Key order is the fixed canonical run order (/root/reference/pipeline.py:142-152).
+OPS: dict[str, Op] = {
+    "data_type_conversion": Op(
+        "Convert data types automatically or with custom mapping",
+        {"auto_detect": (True, _OPT_BOOL), "type_mapping": (None, "dict (optional)"),
+         "errors": ("coerce", _OPT_STR)},
+        _late(type_conversion, "convert_data_types"), {},
+        lambda p: bool(p["auto_detect"] or p["errors"] in _RAISE_OR_IGNORE and p["type_mapping"])),
+    "text_cleaning": Op(
+        "Clean text columns with various operations",
+        {"operations": (None, "list (required)"), "columns": (None, _OPT_LIST),
+         "custom_patterns": (None, "dict (optional)")},
+        _late(text_cleaning, "clean_text_columns"),
+        {"operations": ("operations", text_cleaning.OPS)}, lambda p: False),
+    "datetime_parsing": Op(
+        "Parse datetime columns and extract features",
+        {"columns": (None, _OPT_LIST), "date_format": (None, _OPT_STR),
+         "auto_detect": (True, _OPT_BOOL), "extract_features": (False, _OPT_BOOL),
+         "errors": ("coerce", _OPT_STR)},
+        _late(datetime_parsing, "parse_datetime_columns"), {},
+        # without a date_format, formats are elected from a sample
+        lambda p: bool(p["auto_detect"] or not p["date_format"]
+                       or p["errors"] in _RAISE_OR_IGNORE)),
+    "missing_values": Op(
+        "Handle missing values in the dataset",
+        {"strategy": ("fill_mean", "string (required)"),
+         "threshold": (0.5, "float (0.0-1.0, optional)"), "columns": (None, _OPT_LIST)},
+        _late(missing_values, "fix_missing_values"),
+        {"strategies": ("strategy", missing_values.STRATEGIES)},
+        lambda p: p["strategy"] not in ("drop_rows", "drop_rows_threshold")),
+    "duplicates": Op(
+        "Remove duplicate rows from the dataset",
+        {"subset": (None, _OPT_LIST), "keep": ("first", _OPT_STR)},
+        _late(duplicates, "drop_duplicates"), {}, lambda p: False),
+    "outliers": Op(
+        "Handle outliers in numeric columns",
+        {"method": ("iqr", "string (required)"), "action": ("remove", "string (required)"),
+         "threshold": (1.5, "float (optional)"), "columns": (None, _OPT_LIST)},
+        _late(outliers, "handle_outliers"),
+        {"methods": ("method", outliers.METHODS), "actions": ("action", outliers.ACTIONS)},
+        # transform is a log1p projection; isolation_forest has no cap
+        lambda p: p["action"] != "transform"
+        and (p["method"], p["action"]) != ("isolation_forest", "cap")),
+    "typo_fix": Op(
+        "Fix typos and spelling errors",
+        {"method": ("common_typos", "string (required)"), "columns": (None, _OPT_LIST),
+         "similarity_threshold": (0.8, "float (optional)"),
+         "custom_dict": (None, "dict (optional)")},
+        _late(typo_fix, "fix_typos"), {"methods": ("method", typo_fix.METHODS)},
+        # common_typos is a pure regexp chain; fuzzy/spell fit a map
+        lambda p: p["method"] != "common_typos"),
+    "encoding": Op(
+        "Encode categorical variables",
+        {"method": ("label", "string (required)"), "columns": (None, _OPT_LIST),
+         "drop_first": (False, _OPT_BOOL)},
+        lambda df, method, **p: _ENCODERS[method](df, **p),
+        {"methods": ("method", list(_ENCODERS))}),
+    "normalization": Op(
+        "Normalize numerical data",
+        {"method": ("minmax", "string (required)"), "columns": (None, _OPT_LIST),
+         "feature_range": ((0, 1), "tuple (optional)"), "with_mean": (True, _OPT_BOOL),
+         "with_std": (True, _OPT_BOOL)},
+        lambda df, feature_range, **p: normalization.normalize_data(
+            df, feature_range=tuple(feature_range), **p)[0],
+        {"methods": ("method", normalization.METHODS)},
+        lambda p: p["method"] != "normalize"),  # normalize is a row-wise projection
+}
+CANONICAL_ORDER = list(OPS)
+
+# Python types a manifest type's first word admits (None is always let
+# through: the op then applies its own default or fails on its own).
+_TYPES: dict[str, tuple[type, ...]] = {
+    "string": (str,), "float": (int, float), "boolean": (bool,),
+    "list": (list, tuple), "dict": (dict,), "tuple": (list, tuple),
+}
+
+
+def op_params(name: str, cfg: dict[str, Any]) -> dict[str, Any]:
+    """Op ``name``'s parameters: each from ``cfg`` or its default. A plain
+    string given for a list parameter (``columns``, ``subset``,
+    ``text_cleaning.operations``) means a one-element list: the bundled UI
+    sends a single typed name that way."""
+    out = {}
+    for p, (default, kind) in OPS[name].params.items():
+        v = cfg.get(p, default)
+        out[p] = [v] if isinstance(v, str) and kind.startswith("list") else v
+    return out
+
+
+def _check_types(name: str, params: dict[str, Any]) -> None:
+    for p, v in params.items():
+        kind = OPS[name].params[p][1]
+        want = _TYPES[kind.split()[0]]
+        if v is not None and (
+            not isinstance(v, want) or (isinstance(v, bool) and bool not in want)
+        ):
+            raise TypeError(f"{name}.{p} must be {kind}, got {v!r}")
 
 
 logger = logging.getLogger("dataforge_spark.pipeline")
@@ -105,26 +225,30 @@ def disable_run_logging(handler: logging.Handler) -> None:
 
 
 def validate_operations(operations: dict[str, Any]) -> list[str]:
-    """Mirror of /root/reference/pipeline.py:498-529: returns a list of
-    problems (empty = valid)."""
-    errors: list[str] = []
+    """Problems with an operations config (empty = valid): unknown op
+    names, configs that are not dicts, and any given value outside a list
+    the manifest advertises (``Op.choices``). The reference
+    (/root/reference/pipeline.py:498-529) checks the names, the
+    missing-value strategy and the outlier method."""
     if not isinstance(operations, dict):
         return ["operations must be a dict"]
+    errors: list[str] = []
     for name, cfg in operations.items():
-        if name not in CANONICAL_ORDER:
+        if name not in OPS:
             errors.append(f"unknown operation: {name}")
             continue
         if not isinstance(cfg, dict):
             errors.append(f"config for {name} must be a dict")
             continue
-        if name == "missing_values":
-            s = cfg.get("strategy", "fill_mean")
-            if s not in VALID_MISSING_STRATEGIES:
-                errors.append(f"invalid missing_values.strategy: {s}")
-        if name == "outliers":
-            m = cfg.get("method", "iqr")
-            if m not in VALID_OUTLIER_METHODS:
-                errors.append(f"invalid outliers.method: {m}")
+        params = op_params(name, cfg)
+        for param, allowed in OPS[name].choices.values():
+            if param not in cfg:
+                continue  # the default
+            v = params[param]
+            errors += [
+                f"invalid {name}.{param}: {x}"
+                for x in (v if isinstance(v, (list, tuple)) else [v]) if x not in allowed
+            ]
     return errors
 
 
@@ -297,97 +421,10 @@ class CleaningPipeline:
         self._pinned: list[DataFrame] = []
 
     @staticmethod
-    def _runs_stat_jobs(name: str, cfg: dict[str, Any]) -> bool:
-        """Whether this op executes driver-side statistics jobs over its
-        input (each such job re-executes the full upstream lineage unless
-        a boundary below it is persisted). Pure-projection ops return
-        False."""
-        if name in ("text_cleaning", "duplicates"):
-            return False
-        if name == "missing_values":
-            return cfg.get("strategy", "fill_mean") not in (
-                "drop_rows", "drop_rows_threshold"
-            )
-        if name == "typo_fix":
-            # common_typos is a pure regexp chain; fuzzy/spell fit a map
-            return cfg.get("method", "common_typos") != "common_typos"
-        if name in ("data_type_conversion", "datetime_parsing"):
-            # errors=raise|ignore count failing casts in a job of their own
-            return bool(cfg.get("auto_detect", True)) or cfg.get("errors") in (
-                "ignore", "raise"
-            )
-        return True  # outliers / normalization / encoding fit statistics
-
-    def _apply_one(self, df: DataFrame, name: str, cfg: dict[str, Any]) -> DataFrame:
-        if name == "data_type_conversion":
-            return type_conversion.convert_data_types(
-                df,
-                type_mapping=cfg.get("type_mapping"),
-                auto_detect=cfg.get("auto_detect", True),
-                errors=cfg.get("errors", "coerce"),
-            )
-        if name == "text_cleaning":
-            return text_cleaning.clean_text_columns(
-                df,
-                columns=cfg.get("columns"),
-                operations=cfg.get("operations"),
-                custom_patterns=cfg.get("custom_patterns"),
-            )
-        if name == "datetime_parsing":
-            return datetime_parsing.parse_datetime_columns(
-                df,
-                columns=cfg.get("columns"),
-                date_format=cfg.get("date_format"),
-                auto_detect=cfg.get("auto_detect", True),
-                extract_features=cfg.get("extract_features", False),
-                errors=cfg.get("errors", "coerce"),
-            )
-        if name == "missing_values":
-            return missing_values.fix_missing_values(
-                df,
-                strategy=cfg.get("strategy", "fill_mean"),
-                threshold=cfg.get("threshold", 0.5),
-                columns=cfg.get("columns"),
-            )
-        if name == "duplicates":
-            return duplicates.drop_duplicates(
-                df, subset=cfg.get("subset"), keep=cfg.get("keep", "first")
-            )
-        if name == "outliers":
-            return outliers.handle_outliers(
-                df,
-                columns=cfg.get("columns"),
-                method=cfg.get("method", "iqr"),
-                action=cfg.get("action", "remove"),
-                threshold=cfg.get("threshold", 1.5),
-            )
-        if name == "typo_fix":
-            return typo_fix.fix_typos(
-                df,
-                columns=cfg.get("columns"),
-                method=cfg.get("method", "common_typos"),
-                similarity_threshold=cfg.get("similarity_threshold", 0.8),
-                custom_dict=cfg.get("custom_dict"),
-            )
-        if name == "encoding":
-            method = cfg.get("method", "label")
-            if method == "label":
-                return encoding.encode_label(df, cfg.get("columns"))[0]
-            if method == "onehot":
-                return encoding.encode_onehot(
-                    df, cfg.get("columns"), drop_first=cfg.get("drop_first", False)
-                )
-            return encoding.encode_frequency(df, cfg.get("columns"))
-        if name == "normalization":
-            return normalization.normalize_data(
-                df,
-                columns=cfg.get("columns"),
-                method=cfg.get("method", "minmax"),
-                feature_range=tuple(cfg.get("feature_range", (0, 1))),
-                with_mean=cfg.get("with_mean", True),
-                with_std=cfg.get("with_std", True),
-            )[0]
-        raise ValueError(f"unknown operation {name!r}")
+    def _apply_one(df: DataFrame, name: str, cfg: dict[str, Any]) -> DataFrame:
+        params = op_params(name, cfg)
+        _check_types(name, params)
+        return OPS[name].apply(df, **params)
 
     def run(self, df: DataFrame, operations: dict[str, Any]) -> tuple[DataFrame, dict]:
         """Apply enabled ops in canonical order; per-op error isolation
@@ -408,14 +445,14 @@ class CleaningPipeline:
         persisted: list[DataFrame] = []
 
         enabled = [
-            n for n in CANONICAL_ORDER
+            n for n in OPS
             if operations.get(n) and operations[n].get("enabled", False)
         ]
         # downstream stat-job count per op: how many LATER enabled ops will
         # re-scan the boundary after this op for their fitted statistics
         stat_after = {
             n: sum(
-                self._runs_stat_jobs(m, operations[m])
+                OPS[m].runs_stats(op_params(m, operations[m]))
                 for m in enabled[enabled.index(n) + 1:]
             )
             for n in enabled

@@ -7,9 +7,9 @@ clean-data (validate → run → ``{base}_cleaned.csv`` + download URL,
 ``/pipeline-info`` capability manifest (:240-331).
 
 The request handlers are plain framework-free methods (testable without
-an HTTP stack); ``create_app()`` wires them into FastAPI when it is
-installed — this container does not ship it, so the wiring is
-import-gated and exercised only by its presence.
+an HTTP stack); ``http_server`` serves them over HTTP with the standard
+library alone. The manifest and the request check both come from the op
+table in ``pipeline.OPS``.
 """
 
 from __future__ import annotations
@@ -23,7 +23,7 @@ from typing import Any
 from pyspark.sql import SparkSession
 
 from . import io as dfio
-from .pipeline import CleaningPipeline, validate_operations
+from .pipeline import OPS, CleaningPipeline, validate_operations
 
 # Shares the package logger tree: attach pipeline.enable_run_logging()
 # for the reference's persistent pipeline_log.txt behavior.
@@ -44,94 +44,18 @@ class ServiceError(Exception):
 def pipeline_info() -> dict[str, Any]:
     """Capability manifest (reference /pipeline-info, main.py:240-331) —
     the authoritative list of operations, strategies and parameters this
-    engine accepts. Same structure as the reference; option lists come
-    from the operator modules so the manifest cannot drift from the code."""
-    from .operators import missing_values, normalization, outliers, text_cleaning
-
+    engine accepts. Same structure as the reference, rendered from
+    ``pipeline.OPS``: the table that also dispatches and validates each
+    op, so the manifest cannot drift from the code."""
     return {
         "status": "success",
         "operations": {
-            "missing_values": {
-                "description": "Handle missing values in the dataset",
-                "strategies": list(missing_values.STRATEGIES),
-                "parameters": {
-                    "strategy": "string (required)",
-                    "threshold": "float (0.0-1.0, optional)",
-                    "columns": "list (optional)",
-                },
-            },
-            "duplicates": {
-                "description": "Remove duplicate rows from the dataset",
-                "parameters": {"subset": "list (optional)", "keep": "string (optional)"},
-            },
-            "outliers": {
-                "description": "Handle outliers in numeric columns",
-                "methods": list(outliers.METHODS),
-                "actions": list(outliers.ACTIONS),
-                "parameters": {
-                    "method": "string (required)",
-                    "action": "string (required)",
-                    "threshold": "float (optional)",
-                    "columns": "list (optional)",
-                },
-            },
-            "data_type_conversion": {
-                "description": "Convert data types automatically or with custom mapping",
-                "parameters": {
-                    "auto_detect": "boolean (optional)",
-                    "type_mapping": "dict (optional)",
-                    "errors": "string (optional)",
-                },
-            },
-            "text_cleaning": {
-                "description": "Clean text columns with various operations",
-                "operations": list(text_cleaning.OPS),
-                "parameters": {
-                    "operations": "list (required)",
-                    "columns": "list (optional)",
-                    "custom_patterns": "dict (optional)",
-                },
-            },
-            "datetime_parsing": {
-                "description": "Parse datetime columns and extract features",
-                "parameters": {
-                    "columns": "list (optional)",
-                    "date_format": "string (optional)",
-                    "auto_detect": "boolean (optional)",
-                    "extract_features": "boolean (optional)",
-                    "errors": "string (optional)",
-                },
-            },
-            "encoding": {
-                "description": "Encode categorical variables",
-                "methods": ["label", "onehot", "target"],
-                "parameters": {
-                    "method": "string (required)",
-                    "columns": "list (optional)",
-                    "drop_first": "boolean (optional)",
-                },
-            },
-            "typo_fix": {
-                "description": "Fix typos and spelling errors",
-                "methods": ["common_typos", "fuzzy_match", "spell_check"],
-                "parameters": {
-                    "method": "string (required)",
-                    "columns": "list (optional)",
-                    "similarity_threshold": "float (optional)",
-                    "custom_dict": "dict (optional)",
-                },
-            },
-            "normalization": {
-                "description": "Normalize numerical data",
-                "methods": list(normalization.METHODS),
-                "parameters": {
-                    "method": "string (required)",
-                    "columns": "list (optional)",
-                    "feature_range": "tuple (optional)",
-                    "with_mean": "boolean (optional)",
-                    "with_std": "boolean (optional)",
-                },
-            },
+            name: {
+                "description": op.description,
+                **{key: list(allowed) for key, (_, allowed) in op.choices.items()},
+                "parameters": {p: kind for p, (_, kind) in op.params.items()},
+            }
+            for name, op in OPS.items()
         },
     }
 
@@ -255,66 +179,3 @@ class DataForgeService:
     # -- GET /pipeline-info --------------------------------------------------
     def pipeline_info(self) -> dict[str, Any]:
         return pipeline_info()
-
-
-def create_app(spark: SparkSession, upload_dir: str = "uploads"):
-    """FastAPI wiring (optional — fastapi is not in this container)."""
-    try:
-        from fastapi import FastAPI, File, Form, HTTPException, UploadFile
-        from fastapi.responses import FileResponse
-    except ImportError as e:  # pragma: no cover
-        raise ImportError(
-            "fastapi is not installed; use DataForgeService directly or "
-            "install fastapi to serve HTTP"
-        ) from e
-
-    svc = DataForgeService(spark, upload_dir)
-    app = FastAPI(title="DataForge-Spark")
-
-    def guard(fn, *a, **kw):
-        try:
-            return fn(*a, **kw)
-        except ServiceError as e:
-            raise HTTPException(status_code=e.status_code, detail=e.detail)
-
-    @app.get("/")
-    async def root():
-        return svc.root()
-
-    @app.get("/health")
-    async def health():
-        return svc.health()
-
-    @app.post("/upload")
-    async def upload(file: UploadFile = File(...)):
-        tmp = os.path.join(upload_dir, f".tmp_{file.filename}")
-        with open(tmp, "wb") as buf:
-            shutil.copyfileobj(file.file, buf)
-        try:
-            return guard(svc.upload, file.filename, tmp)
-        finally:
-            if os.path.exists(tmp):
-                os.remove(tmp)
-
-    @app.post("/clean-data")
-    async def clean_data(file_path: str = Form(...), operations: str = Form(...)):
-        return guard(svc.clean_data, file_path, operations)
-
-    @app.get("/download/{filename}")
-    async def download(filename: str):
-        path = guard(svc.download_path, filename)
-        return FileResponse(path=path, filename=filename, media_type="text/csv")
-
-    @app.get("/files")
-    async def files():
-        return guard(svc.list_files)
-
-    @app.delete("/files/{filename}")
-    async def delete(filename: str):
-        return guard(svc.delete_file, filename)
-
-    @app.get("/pipeline-info")
-    async def info():
-        return svc.pipeline_info()
-
-    return app

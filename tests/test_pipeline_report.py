@@ -79,28 +79,75 @@ def test_metrics_off_adds_no_jobs_keys(spark):
     assert "cells_changed" not in report["operations"]["duplicates"]
 
 
-def test_auto_persist_policy_counts_downstream_stat_ops():
-    """_runs_stat_jobs classifies which ops re-scan their input with
-    driver-side statistics jobs — the auto-persist policy's input."""
-    from dataforge_spark.pipeline import CleaningPipeline
+# The columns each op works on in the stat-jobs matrix below.
+_MATRIX_BASE = {
+    "data_type_conversion": {}, "text_cleaning": {"columns": ["note"]},
+    "datetime_parsing": {"columns": ["d"]}, "missing_values": {},
+    "duplicates": {"subset": ["cat"]}, "outliers": {"columns": ["amt"]},
+    "typo_fix": {"columns": ["cat", "note"]}, "encoding": {"columns": ["cat"]},
+    "normalization": {"columns": ["amt"]},
+}
+# Variants of the parameters that are not in a manifest list.
+_MATRIX_EXTRA = [
+    ("data_type_conversion", {"auto_detect": False}),
+    ("data_type_conversion", {"auto_detect": False, "type_mapping": {"amt": "string"}}),
+    ("data_type_conversion", {"auto_detect": False, "type_mapping": {"amt": "string"},
+                              "errors": "raise"}),
+    ("data_type_conversion", {"auto_detect": False, "type_mapping": {"amt": "string"},
+                              "errors": "ignore"}),
+    ("datetime_parsing", {"columns": ["d"], "auto_detect": False}),
+    ("datetime_parsing", {"columns": ["d"], "auto_detect": False, "date_format": "%Y-%m-%d"}),
+    ("datetime_parsing", {"columns": ["d"], "auto_detect": False, "date_format": "%Y-%m-%d",
+                          "errors": "raise"}),
+    ("datetime_parsing", {"columns": ["d"], "auto_detect": False, "date_format": "%Y-%m-%d",
+                          "errors": "ignore"}),
+    ("duplicates", {}),
+]
 
-    f = CleaningPipeline._runs_stat_jobs
-    assert not f("text_cleaning", {})
-    assert not f("duplicates", {})
-    assert not f("missing_values", {"strategy": "drop_rows"})
-    assert f("missing_values", {"strategy": "fill_median"})
-    assert f("missing_values", {})  # default fill_mean
-    assert not f("typo_fix", {})  # default common_typos is a regexp chain
-    assert f("typo_fix", {"method": "fuzzy_match"})
-    assert f("data_type_conversion", {})  # auto_detect default True
-    assert not f("data_type_conversion", {"auto_detect": False})
-    assert f("data_type_conversion", {"auto_detect": False, "errors": "raise"})
-    assert f("datetime_parsing", {})  # auto_detect default True
-    assert not f("datetime_parsing", {"auto_detect": False})
-    assert f("datetime_parsing", {"auto_detect": False, "errors": "raise"})
-    assert f("datetime_parsing", {"auto_detect": False, "errors": "ignore"})
-    assert not f("datetime_parsing", {"auto_detect": False, "errors": "coerce"})
-    assert f("outliers", {}) and f("normalization", {}) and f("encoding", {})
+
+def _stat_matrix():
+    """Every op with every combination of the values its manifest lists,
+    plus ``_MATRIX_EXTRA``."""
+    import itertools
+
+    from dataforge_spark.pipeline import OPS
+
+    for name, op in OPS.items():
+        params = [p for p, _ in op.choices.values()]
+        for combo in itertools.product(*[allowed for _, allowed in op.choices.values()]):
+            yield name, {**_MATRIX_BASE[name], **dict(zip(params, combo))}
+    yield from _MATRIX_EXTRA
+
+
+def test_auto_persist_policy_counts_downstream_stat_ops(spark):
+    """Each op's ``runs_stats`` predicate (the auto-persist policy's input)
+    is true exactly when building the op's plan starts Spark jobs, for
+    every op and every method, strategy and action, on a frame where each
+    op has columns to work on."""
+    from dataforge_spark.pipeline import OPS, op_params
+
+    df = spark.createDataFrame(
+        [(0, 10.0, "apple", "teh cat", "2021-03-04"),
+         (1, 12.0, "apple", "teh dog", "2021-03-05"),
+         (2, None, "banana", "a note", "2021-03-06"),
+         (3, 11.0, "banana", "a note", None),
+         (4, 1000.0, "cherry", "a notte", "2021-03-08"),
+         (5, 13.0, "aple", "plain", "2021-03-09"),
+         (6, 14.0, "apple", "plain", "2021-03-10"),
+         (7, 14.0, "apple", "plain", "2021-03-10")],
+        f"{ROW_ID} long, amt double, cat string, note string, d string",
+    )
+    # A local frame has no size estimate, so the ordered fills take their
+    # bucketed path (a boundary-sketch job), as inputs past
+    # missing_values.FAST_FILL_MAX_BYTES do; below it they start no job.
+    wrong, seen = [], set()
+    for name, cfg in _stat_matrix():
+        jobs = count_jobs(spark, lambda: CleaningPipeline._apply_one(df, name, cfg))
+        if OPS[name].runs_stats(op_params(name, cfg)) != (jobs > 0):
+            wrong.append((name, cfg, jobs))
+        seen.add(name)
+    assert seen == set(OPS)
+    assert not wrong, wrong
 
 
 def test_run_logging_writes_per_op_lines(spark, tmp_path):

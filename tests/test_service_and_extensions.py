@@ -2,6 +2,7 @@
 parity with the reference (/root/reference/main.py:240-331), streaming +
 multimodal smoke tests, and regressions for the review-fix batch."""
 
+import json
 import os
 
 import pytest
@@ -518,6 +519,132 @@ def test_dotted_and_spaced_csv_headers_flow_end_to_end(spark, tmp_path):
     mv = res["result"]["operations"]["missing_values"]
     assert mv["status"] == "success"
     assert mv["missing_after"]["score pct"] == 0
+
+
+# Seven rows with a dot in every header: one NULL amount and one NULL score,
+# an amount outlier (1000), two 'teh' typos, one fuzzy twin ('aple' of
+# 'apple'), one rare misspelling ('notte') and MM/dd/yyyy date strings.
+DOTTED_CSV = """amt.usd,cat.name,note.txt,joined.at,score.pct
+10,apple,teh cat,03/04/2021,1.5
+12,apple,teh dog,03/05/2021,2.5
+,banana,a note,03/06/2021,3.5
+11,banana,a note,03/07/2021,
+1000,cherry,a notte,03/08/2021,4.5
+13,aple,plain,03/09/2021,5.5
+14,apple,plain,03/10/2021,6.5
+"""
+
+# (op, config, expected effect): {column: changed cells}, or
+# ("rows", n) for the rows left, or ("column", name) for an added column.
+DOTTED_CASES = [
+    ("data_type_conversion", {"type_mapping": {"score.pct": "int"}}, {"score.pct": 6}),
+    ("text_cleaning", {"columns": ["note.txt"], "operations": ["uppercase"]}, {"note.txt": 7}),
+    ("datetime_parsing", {"columns": ["joined.at"]}, {"joined.at": 7}),
+    # a fractional fill turns the int amounts into doubles: every cell changes
+    ("missing_values", {"strategy": "fill_mean"}, {"amt.usd": 7, "score.pct": 1}),
+    ("missing_values", {"strategy": "fill_median"}, {"amt.usd": 7, "score.pct": 1}),
+    ("missing_values", {"strategy": "forward_fill"}, {"amt.usd": 1, "score.pct": 1}),
+    ("duplicates", {"subset": ["cat.name"]}, ("rows", 4)),
+    ("outliers", {"method": "iqr", "columns": ["amt.usd"]}, ("rows", 6)),
+    ("outliers", {"method": "zscore", "columns": ["amt.usd"]}, ("rows", 6)),
+    ("typo_fix", {"method": "common_typos", "columns": ["note.txt"]}, {"note.txt": 2}),
+    ("typo_fix", {"method": "fuzzy_match", "columns": ["cat.name"]}, {"cat.name": 1}),
+    ("typo_fix", {"method": "spell_check", "columns": ["note.txt"]}, {"note.txt": 1}),
+    ("encoding", {"method": "label", "columns": ["cat.name"]}, {"cat.name": 7}),
+    ("encoding", {"method": "onehot", "columns": ["cat.name"]}, ("column", "cat.name_aple")),
+    ("encoding", {"method": "target", "columns": ["cat.name"]},
+     ("column", "cat.name_freq_encoded")),
+    ("normalization", {"method": "minmax", "columns": ["score.pct"]}, {"score.pct": 6}),
+    ("normalization", {"method": "robust", "columns": ["score.pct"]}, {"score.pct": 6}),
+]
+
+
+@pytest.mark.parametrize("name,cfg,effect", DOTTED_CASES,
+                         ids=["-".join([n, *filter(None, [c.get("method"), c.get("strategy")])])
+                              for n, c, _ in DOTTED_CASES])
+def test_every_op_handles_dotted_csv_headers(spark, tmp_path, name, cfg, effect):
+    """A dot in a column name must not be read as struct access: each op,
+    run through the service on dotted headers, succeeds and has its
+    effect on the named columns."""
+    svc = DataForgeService(spark, upload_dir=str(tmp_path / "up"))
+    src = tmp_path / "dots.csv"
+    src.write_text(DOTTED_CSV)
+    up = svc.upload("dots.csv", str(src))
+    res = svc.clean_data(up["file_path"], json.dumps({name: {"enabled": True, **cfg}}))
+    op = res["result"]["operations"][name]
+    assert op["status"] == "success", op
+    if isinstance(effect, dict):
+        assert {c: op["cells_changed"].get(c, 0) for c in effect} == effect, op
+    elif effect[0] == "rows":
+        assert op["rows_after"] == effect[1], op
+    else:
+        assert effect[1] in res["result"]["final_columns"], res["result"]
+
+
+# Per op: configs naming a value outside a manifest list (a 400 before any
+# Spark work), and one scalar of the wrong type (an op error).
+FAULTS = {
+    "data_type_conversion": ([], {"auto_detect": "yes"}),
+    "text_cleaning": ([{"operations": ["lowercase", "shout"]}, {"operations": "shout"}],
+                      {"custom_patterns": "x"}),
+    "datetime_parsing": ([], {"date_format": 5}),
+    "missing_values": ([{"strategy": "fill_avg"}], {"threshold": "abc"}),
+    "duplicates": ([], {"keep": 5}),
+    "outliers": ([{"method": "iqrr"}, {"action": "clip"}], {"threshold": "abc"}),
+    "typo_fix": ([{"method": "spellcheck"}], {"similarity_threshold": "abc"}),
+    "encoding": ([{"method": "lable"}], {"method": "onehot", "drop_first": "no"}),
+    "normalization": ([{"method": "zscore"}], {"feature_range": 5}),
+}
+# Per op: its list parameter and a one-element value for it (text_cleaning
+# gets its operations in the same form too).
+ONE_NAME = {
+    "text_cleaning": {"columns": "note.txt", "operations": "uppercase"},
+    "datetime_parsing": {"columns": "joined.at"},
+    "missing_values": {"columns": "amt.usd"},
+    "duplicates": {"subset": "cat.name"},
+    "outliers": {"columns": "amt.usd"},
+    "typo_fix": {"columns": "note.txt"},
+    "encoding": {"columns": "cat.name"},
+    "normalization": {"columns": "score.pct"},
+}
+
+
+@pytest.mark.parametrize("name", list(FAULTS))
+def test_fault_injection_matrix(spark, tmp_path, name):
+    """Malformed configs through the service, one op at a time: a value
+    outside a list the manifest advertises is a 400; a plain string where
+    a list is expected means a one-element list (same report, same CSV);
+    a scalar of the wrong type is an op error that keeps the previous
+    frame. Every request that is accepted writes its output."""
+    svc = DataForgeService(spark, upload_dir=str(tmp_path / "up"))
+    src = tmp_path / "dots.csv"
+    src.write_text(DOTTED_CSV)
+    up = svc.upload("dots.csv", str(src))
+
+    def clean(cfg):
+        res = svc.clean_data(up["file_path"], json.dumps({name: {"enabled": True, **cfg}}))
+        assert res["status"] == "success"
+        with open(svc.download_path(os.path.basename(res["output_file"]))) as f:
+            return res["result"]["operations"].get(name), f.read()
+
+    unknown, wrong_type = FAULTS[name]
+    for cfg in unknown:
+        with pytest.raises(ServiceError) as e:
+            clean(cfg)
+        assert e.value.status_code == 400 and f"invalid {name}." in e.value.detail, cfg
+
+    _, unchanged = clean({"enabled": False})
+    op, out = clean(wrong_type)
+    assert op["status"] == "error" and "must be" in op["message"], op
+    assert out == unchanged
+
+    if name in ONE_NAME:
+        as_str = ONE_NAME[name]
+        op_s, out_s = clean(as_str)
+        op_l, out_l = clean({k: [v] for k, v in as_str.items()})
+        assert op_s["status"] == "success", op_s
+        assert (op_s, out_s) == (op_l, out_l)
+        assert op_l["cells_changed"] or op_l["rows_after"] < op_l["rows_before"], op_l
 
 
 def test_unigram_logprob_matches_closed_form(spark):
